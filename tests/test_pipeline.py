@@ -50,6 +50,38 @@ def test_triples_match_oracle(result):
     assert got == want  # determinism: exact match expected, not just P/R
 
 
+def test_parity_flag_builds_same_kg(spark, result):
+    """``dedupe_parse=False`` (the frozen bench's scaling legs still pass it)
+    must build exactly the KG of the default run: same triples, concept
+    triples and merged eventualities, compared as multisets.  The one
+    eventuality column left out is ``n_sentences``: it counts parsed rows,
+    which were assertion rows under the former per-row parse and are distinct
+    (relation, tail) rows otherwise."""
+    from folkscope_spark.pipeline import run_pipeline
+
+    parity = run_pipeline(
+        spark, out_dir=None, n_pages=N_PAGES, n_items=N_ITEMS,
+        with_concepts=True, with_canonicalize=False, max_extra=2,
+        dedupe_parse=False,
+    )
+    for name in ("triples", "concept_triples", "events"):
+        a, b = (_set_comparable(r[name]) for r in (result, parity))
+        assert a.exceptAll(b).count() == 0, name
+        assert b.exceptAll(a).count() == 0, name
+
+
+def _set_comparable(df):
+    """The merged eventualities without ``n_sentences``, and with their
+    per-position NER counters as sorted entry arrays (set operations reject
+    map columns)."""
+    if "ner_counters" not in df.columns:
+        return df
+    return df.drop("n_sentences").withColumn(
+        "ner_counters",
+        F.transform("ner_counters", lambda m: F.array_sort(F.map_entries(m))),
+    )
+
+
 def test_eventualities_unique_per_relation(result):
     ev = result["events"]
     dup = ev.groupBy("eid", "relation").count().filter(F.col("count") > 1).count()
