@@ -4,7 +4,7 @@ Three subcommands::
 
     python bench_extra.py queries [--sf-dir D] [--repeats N] [--mode count|noop]
         [--only a,b,c] [--plans-dir plans/r06] [--suffix before]
-    python bench_extra.py kg --pages 25000 [--dedupe/--no-dedupe] [--repeats N]
+    python bench_extra.py kg --pages 25000 [--repeats N]
         [--master local[32]] [--shuffle 96]
     python bench_extra.py headline-all   # bench.py-methodology single pass
 
@@ -106,7 +106,7 @@ def cmd_kg(args):
     # warmup (same as bench.run_kg): one small run pays worker startup/JIT
     run_pipeline(
         spark, out_dir=None, n_pages=300, n_items=60, with_concepts=True,
-        with_canonicalize=True, max_extra=1, dedupe_parse=args.dedupe,
+        with_canonicalize=True, max_extra=1,
     )["triples"].count()
     walls, stages_best = [], None
     for _ in range(args.repeats):
@@ -114,7 +114,7 @@ def cmd_kg(args):
         r = run_pipeline(
             spark, out_dir=None, n_pages=args.pages,
             n_items=max(50, args.pages // 17), with_concepts=True,
-            with_canonicalize=True, max_extra=2, dedupe_parse=args.dedupe,
+            with_canonicalize=True, max_extra=2,
         )
         r["triples"].count()
         wall = time.time() - t0
@@ -127,7 +127,7 @@ def cmd_kg(args):
             stages_best = stages
         spark.catalog.clearCache()
     print(json.dumps({
-        "pages": args.pages, "dedupe": args.dedupe, "master": args.master or f"local[{CPUS}]",
+        "pages": args.pages, "master": args.master or f"local[{CPUS}]",
         "wall_s": round(min(walls), 2), "walls": [round(w, 2) for w in walls],
         "stages": {k: round(v, 3) for k, v in sorted(stages_best.items(), key=lambda x: -x[1])},
     }, indent=1))
@@ -147,7 +147,6 @@ def main():
     q.set_defaults(fn=cmd_queries)
     k = sub.add_parser("kg")
     k.add_argument("--pages", type=int, default=25000)
-    k.add_argument("--dedupe", action=argparse.BooleanOptionalAction, default=True)
     k.add_argument("--repeats", type=int, default=1)
     k.add_argument("--master", default=None)
     k.add_argument("--shuffle", type=int, default=None)

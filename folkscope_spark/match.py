@@ -17,7 +17,6 @@ only shuffle in the whole extraction path is the later ``groupBy(eid)`` merge.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
@@ -163,215 +162,18 @@ def skeleton_subset_dedupe(eventualities: list[dict]) -> list[dict]:
     return [ev for k, ev in zip(keep, eventualities) if k]
 
 
-class _PatternCache:
-    """Per-worker cache of DiGraph-ified broadcast patterns plus the
-    extraction memo, keyed by a content fingerprint of the mined dict.
-
-    Each Spark task deserializes its own copy of the UDF closure, so an
-    identity check on ``mined`` (the round-5 scheme) reset the cache — and
-    with it the memo — on EVERY task; a reused Python worker
-    (``spark.python.worker.reuse``, default on) then re-ran the VF2 sweep for
-    the same distinct sentences once per task instead of once per worker
-    (guide §4.5: module-level state survives task boundaries only when keyed
-    on content, not closure identity).  The fingerprint covers the full
-    pattern tuples and frequencies, so two genuinely different mined sets can
-    never alias.
-
-    The memo exists because ``extract_from_sentence`` is a pure function of
-    (relation, parsed content, patterns) and web-scale corpora repeat
-    identical LLM continuations heavily — in the reference-parity (no global
-    dedupe) configuration the same sentence recurs tens to hundreds of times.
-    Bounded; on overflow it keeps serving hits and stops inserting."""
-
-    MEMO_CAP = 150_000
-    MAX_SETS = 4  # distinct pattern sets kept per worker (warmup + main + slack)
-
-    def __init__(self):
-        self._sets: dict = {}  # fingerprint -> (prepared, memo)
-        self.memo: dict = {}
-
-    @staticmethod
-    def _fingerprint(mined: dict):
-        return tuple(
-            sorted(
-                (rel, tuple(info["patterns"]), tuple(info["freqs"]) if "freqs" in info else ())
-                for rel, info in mined.items()
-            )
-        )
-
-    def get(self, mined: dict):
-        fp = self._fingerprint(mined)
-        entry = self._sets.get(fp)
-        if entry is None:
-            prepared = {}
-            for rel, info in mined.items():
-                prepared[rel] = (
-                    [(p, graph_of(p)) for p in info["patterns"]],
-                    info["hierarchy"],
-                )
-            if len(self._sets) >= self.MAX_SETS:
-                self._sets.pop(next(iter(self._sets)))
-            entry = self._sets[fp] = (prepared, {})
-        self.memo = entry[1]
-        return entry[0]
-
-
-_cache = _PatternCache()
-
-
-def _prepared_and_memo(mined: dict):
-    """Resolve the per-worker pattern cache THROUGH this module-level
-    function: a closure that referenced ``_cache`` directly would get the
-    object cloudpickled by value into every task (each task then sees a
-    private, empty cache and the memo never survives a task boundary);
-    a module-level function is pickled by reference, so the worker executes
-    this body against the real, process-lived module state."""
-    prepared = _cache.get(mined)
-    return prepared, _cache.memo, _cache.MEMO_CAP
-
-
-# distinct-sentence cutoff for the broadcast extraction tier: above it the
-# collected result map stops being dimension-sized and the per-worker memos
-# take over (their cost is bounded by the distinct count per worker)
-MATCH_BROADCAST_CUTOFF = 400_000
-
-
-def _collect_extractions(parsed: DataFrame, mined: dict, cutoff: int):
-    """Distinct-content extraction run once as a small distributed job and
-    returned as {ckey: [(ev, dep_structs)]} for broadcast.
-
-    The per-worker memo removes duplicate extraction *within* a worker, but
-    every worker still pays the full distinct-sentence VF2 sweep once — a
-    per-leg cost of (workers x distinct x per-call), measured at ~14s of wall
-    regardless of core count on the parity legs.  One distributed sweep over
-    the distinct content rows costs (distinct x per-call / cores) plus one
-    bounded shuffle of the content rows (thin-content parse already emits
-    only ~one content row per key per batch), and the result map is
-    dimension-sized below ``cutoff``.  Keys with empty extractions are
-    recorded explicitly so workers never re-verify them."""
-    from pyspark.sql import functions as F
-
-    distinct = (
-        parsed.filter(F.col("pos_tags").isNotNull())
-        .dropDuplicates(["ckey"])
-        .select("ckey", "relation", "pos_tags", "lemmas", "ners", "dependencies")
-        .cache()
-    )
-    try:
-        if distinct.count() > cutoff:
-            return None
-
-        def extract_rows(batches):
-            prepared, _memo, _cap = _prepared_and_memo(mined)
-            for pdf in batches:
-                rows = []
-                for ck, rel, pos_tags, lemmas, ners, dep_structs in zip(
-                    pdf["ckey"], pdf["relation"], pdf["pos_tags"],
-                    pdf["lemmas"], pdf["ners"], pdf["dependencies"],
-                ):
-                    if rel not in prepared:
-                        continue
-                    patterns, hierarchy = prepared[rel]
-                    parsed_row = {
-                        "pos_tags": list(pos_tags),
-                        "lemmas": list(lemmas),
-                        "ners": list(ners),
-                        "dependencies": [
-                            (d["gov"], d["rel"], d["dep"]) for d in dep_structs
-                        ],
-                    }
-                    extracted = extract_from_sentence(
-                        parsed_row, patterns, hierarchy
-                    )
-                    if not extracted:
-                        # marker: known-empty keys must reach the map too
-                        rows.append({"ckey": ck, "eid": None,
-                                     "pattern_sig": None, "words": None,
-                                     "pos_tags": None, "dependencies": None,
-                                     "skeleton_indices": None,
-                                     "verb_indices": None, "ners": None})
-                        continue
-                    for ev in extracted:
-                        rows.append(
-                            {
-                                "ckey": ck,
-                                "eid": ev["eid"],
-                                "pattern_sig": ev["pattern_sig"],
-                                "words": ev["words"],
-                                "pos_tags": ev["pos_tags"],
-                                "dependencies": [
-                                    {"gov": g, "rel": r, "dep": d}
-                                    for g, r, d in ev["dependencies"]
-                                ],
-                                "skeleton_indices": ev["skeleton_indices"],
-                                "verb_indices": ev["verb_indices"],
-                                "ners": ev["ners"],
-                            }
-                        )
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "ckey", "eid", "pattern_sig", "words", "pos_tags",
-                        "dependencies", "skeleton_indices", "verb_indices",
-                        "ners",
-                    ],
-                )
-
-        schema = (
-            "ckey string, eid string, pattern_sig string, "
-            "words array<string>, pos_tags array<string>, "
-            "dependencies array<struct<gov:int,rel:string,dep:int>>, "
-            "skeleton_indices array<int>, verb_indices array<int>, "
-            "ners array<string>"
-        )
-        hits: dict = {}
-        for r in distinct.mapInPandas(extract_rows, schema=schema).collect():
-            if r["eid"] is None:
-                hits.setdefault(r["ckey"], [])
-                continue
-            ev = {
-                "eid": r["eid"],
-                "pattern_sig": r["pattern_sig"],
-                "words": list(r["words"]),
-                "pos_tags": list(r["pos_tags"]),
-                "skeleton_indices": list(r["skeleton_indices"]),
-                "verb_indices": list(r["verb_indices"]),
-                "ners": list(r["ners"]),
-            }
-            dep_structs = [
-                {"gov": d["gov"], "rel": d["rel"], "dep": d["dep"]}
-                for d in r["dependencies"]
-            ]
-            hits.setdefault(r["ckey"], []).append((ev, dep_structs))
-        return hits
-    finally:
-        distinct.unpersist()
-
-
 def match_patterns(
     parsed: DataFrame, mined: dict, subset_dedupe: bool = False,
-    kernel_acc=None, precompute: str | None = None,
+    kernel_acc=None,
 ) -> DataFrame:
-    """parsed (D6) -> eventualities (D8).  ``mined`` is the driver-side
-    pattern dictionary from :func:`folkscope_spark.patterns.finish_patterns`;
-    Spark serializes it into the UDF closure (same role as a broadcast — a
-    few KB).
-
-    ``precompute="broadcast"``: run the distinct-content extraction first as
-    one distributed job and ship the results via ``sc.broadcast`` (see
-    :func:`_collect_extractions`) — for heavily duplicated inputs where
-    otherwise every worker runs the same VF2 sweep once.  Automatically
-    falls back to the per-worker memos past MATCH_BROADCAST_CUTOFF."""
+    """parsed (D6 + ``weight``) -> eventualities (D8): one output row per
+    (parsed row, extracted eventuality), whose ``frequency`` is the parsed
+    row's ``weight`` (1.0 for a parsed frame without that column).  ``mined``
+    is the driver-side pattern dictionary from
+    :func:`folkscope_spark.patterns.finish_patterns`; Spark serializes it into
+    the UDF closure (same role as a broadcast — a few KB)."""
 
     has_weight = "weight" in parsed.columns
-    has_ckey = "ckey" in parsed.columns
-
-    bc_hits = None
-    if precompute == "broadcast" and has_ckey:
-        hits = _collect_extractions(parsed, mined, MATCH_BROADCAST_CUTOFF)
-        if hits is not None:
-            bc_hits = parsed.sparkSession.sparkContext.broadcast(hits)
-
     out_cols = [
         "eid", "sid", "relation", "pattern_sig", "words", "pos_tags",
         "dependencies", "skeleton_indices", "verb_indices", "ners",
@@ -379,13 +181,10 @@ def match_patterns(
     ]
 
     def run(batches):
-        prepared, memo, memo_cap = _prepared_and_memo(mined)
-        bc = bc_hits.value if bc_hits is not None else None
-        # task-scoped content dict, unbounded: with thinned parse output
-        # (parse_assertions thin_content) a null-content row's extraction
-        # MUST be reconstructable within its own partition even when the
-        # bounded module memo stopped inserting
-        task_hits: dict = {}
+        prepared = {
+            rel: ([(p, graph_of(p)) for p in info["patterns"]], info["hierarchy"])
+            for rel, info in mined.items()
+        }
         # eid-determined fat columns (pos_tags, dependencies, skeleton/verb
         # indices, pattern_sig) are emitted once per (relation, eid) per
         # partition and null elsewhere: at web scale an eventuality recurs
@@ -398,153 +197,59 @@ def match_patterns(
         fat_seen: set[tuple[str, str]] = set()
         for pdf in batches:
             with batch_timer(kernel_acc):
-                # Two passes per batch, grouped by content key: pass 1 runs
-                # the extraction once per distinct sentence and collects each
-                # duplicate row's (sid, weight); pass 2 emits the output rows
-                # with C-level list tiling (eid-level columns repeat per
-                # duplicate; row-level columns repeat per eventuality) —
-                # per-duplicate-row Python work drops to a dict lookup + two
-                # appends.  Output rows are identical to the per-row loop,
-                # grouped order aside (all consumers are order-insensitive
-                # DataFrame ops).
-                per_key: dict = {}
-                order: list = []
-                # scalar columns as plain lists (iterating pandas Series
-                # boxes per element — measurable at parity row counts); the
-                # fat array columns are only touched on a memo miss, by index
-                sids_l = pdf["sid"].tolist()
-                rels_l = pdf["relation"].tolist()
-                weights = pdf["weight"].tolist() if has_weight else [1.0] * len(pdf)
-                ckeys = pdf["ckey"].tolist() if has_ckey else sids_l
-                pos_a = pdf["pos_tags"].to_numpy()
-                lem_a = pdf["lemmas"].to_numpy()
-                ner_a = pdf["ners"].to_numpy()
-                dep_a = pdf["dependencies"].to_numpy()
-                use_ckey = has_ckey
-                for i, ck in enumerate(ckeys):
-                    rel = rels_l[i]
+                cols: dict[str, list] = {c: [] for c in out_cols}
+                weights = (
+                    pdf["weight"].tolist() if has_weight else [1.0] * len(pdf)
+                )
+                for sid, rel, pos, lem, ner, deps, w in zip(
+                    pdf["sid"].tolist(), pdf["relation"].tolist(),
+                    pdf["pos_tags"], pdf["lemmas"], pdf["ners"],
+                    pdf["dependencies"], weights,
+                ):
                     if rel not in prepared:
                         continue
-                    # memo key: the JVM-computed content key when the parse
-                    # stage provides one (it determines the whole parsed
-                    # row), else the full content tuple
-                    if use_ckey:
-                        key = ck
-                    else:
-                        key = (
-                            rel, tuple(pos_a[i]), tuple(lem_a[i]), tuple(ner_a[i]),
-                            tuple((d["gov"], d["rel"], d["dep"]) for d in dep_a[i]),
-                        )
-                    e = per_key.get(key)
-                    if e is None:
-                        hit = bc.get(key) if bc is not None else None
-                        if hit is None:
-                            hit = task_hits.get(key)
-                        if hit is None:
-                            hit = memo.get(key)
-                        if hit is None:
-                            pos = pos_a[i]
-                            if pos is None:
-                                # thinned row whose fat row never reached this
-                                # task: the thin-content contract (same
-                                # partitioning producer->consumer) is broken
-                                raise RuntimeError(
-                                    "thinned parsed row with no preceding "
-                                    "content row for key %r" % (key,)
-                                )
-                            patterns, hierarchy = prepared[rel]
-                            parsed_row = {
-                                "pos_tags": list(pos),
-                                "lemmas": list(lem_a[i]),
-                                "ners": list(ner_a[i]),
-                                "dependencies": [
-                                    (d["gov"], d["rel"], d["dep"])
-                                    for d in dep_a[i]
-                                ],
-                            }
-                            extracted = extract_from_sentence(
-                                parsed_row, patterns, hierarchy
-                            )
-                            # Arrow-ready dependency structs once per
-                            # distinct sentence, not once per duplicate row
-                            hit = [
-                                (
-                                    ev,
-                                    [
-                                        {"gov": g, "rel": r, "dep": d}
-                                        for g, r, d in ev["dependencies"]
-                                    ],
-                                )
-                                for ev in extracted
-                            ]
-                            if len(memo) < memo_cap:
-                                memo[key] = hit
-                        task_hits[key] = hit
-                        e = per_key[key] = (rel, hit, [], [])
-                        order.append(key)
-                    e[2].append(sids_l[i])
-                    e[3].append(float(weights[i]))
-
-                cols_out: dict[str, list] = {c: [] for c in out_cols}
-                for key in order:
-                    rel, hit, sids, ws = per_key[key]
-                    if subset_dedupe:
-                        kept = skeleton_subset_dedupe([ev for ev, _ in hit])
-                        kept_ids = {id(ev) for ev in kept}
-                        pairs = [p for p in hit if id(p[0]) in kept_ids]
-                    else:
-                        pairs = hit
-                    k = len(pairs)
-                    if k == 0:
-                        continue
-                    m = len(sids)
-                    eids, psig, fpos, fdep, fskel, fverb, wcol, ncol = (
-                        [], [], [], [], [], [], [], []
+                    patterns, hierarchy = prepared[rel]
+                    parsed_row = {
+                        "pos_tags": list(pos),
+                        "lemmas": list(lem),
+                        "ners": list(ner),
+                        "dependencies": [
+                            (d["gov"], d["rel"], d["dep"]) for d in deps
+                        ],
+                    }
+                    extracted = extract_from_sentence(
+                        parsed_row, patterns, hierarchy
                     )
-                    for ev, dep_structs_out in pairs:
-                        ft = (rel, ev["eid"]) not in fat_seen
-                        if ft:
+                    if subset_dedupe:
+                        extracted = skeleton_subset_dedupe(extracted)
+                    for ev in extracted:
+                        fat = (rel, ev["eid"]) not in fat_seen
+                        if fat:
                             fat_seen.add((rel, ev["eid"]))
-                        eids.append(ev["eid"])
-                        psig.append(ev["pattern_sig"] if ft else None)
-                        fpos.append(ev["pos_tags"] if ft else None)
-                        fdep.append(dep_structs_out if ft else None)
-                        fskel.append(ev["skeleton_indices"] if ft else None)
-                        fverb.append(ev["verb_indices"] if ft else None)
-                        wcol.append(ev["words"])
-                        ncol.append(ev["ners"])
-                    none_tail = [None] * (k * (m - 1))
-                    cols_out["eid"].extend(eids * m)
-                    if k == 1:
-                        cols_out["sid"].extend(sids)
-                        cols_out["frequency"].extend(ws)
-                    else:
-                        cols_out["sid"].extend(
-                            np.repeat(np.asarray(sids, dtype=object), k).tolist()
+                        cols["eid"].append(ev["eid"])
+                        cols["sid"].append(sid)
+                        cols["relation"].append(rel)
+                        cols["words"].append(ev["words"])
+                        cols["ners"].append(ev["ners"])
+                        cols["frequency"].append(w)
+                        cols["pattern_sig"].append(
+                            ev["pattern_sig"] if fat else None)
+                        cols["pos_tags"].append(ev["pos_tags"] if fat else None)
+                        cols["dependencies"].append(
+                            [{"gov": g, "rel": r, "dep": d}
+                             for g, r, d in ev["dependencies"]]
+                            if fat else None
                         )
-                        cols_out["frequency"].extend(
-                            np.repeat(np.asarray(ws, dtype=np.float64), k).tolist()
-                        )
-                    cols_out["relation"].extend([rel] * (k * m))
-                    cols_out["pattern_sig"].extend(psig)
-                    cols_out["pattern_sig"].extend(none_tail)
-                    cols_out["words"].extend(wcol * m)
-                    cols_out["pos_tags"].extend(fpos)
-                    cols_out["pos_tags"].extend(none_tail)
-                    cols_out["dependencies"].extend(fdep)
-                    cols_out["dependencies"].extend(none_tail)
-                    cols_out["skeleton_indices"].extend(fskel)
-                    cols_out["skeleton_indices"].extend(none_tail)
-                    cols_out["verb_indices"].extend(fverb)
-                    cols_out["verb_indices"].extend(none_tail)
-                    cols_out["ners"].extend(ncol * m)
-                out = pd.DataFrame(cols_out, columns=out_cols)
+                        cols["skeleton_indices"].append(
+                            ev["skeleton_indices"] if fat else None)
+                        cols["verb_indices"].append(
+                            ev["verb_indices"] if fat else None)
+                out = pd.DataFrame(cols, columns=out_cols)
             # yield outside the timed block: suspended (Arrow) time not counted
             yield out
 
     cols = ["sid", "relation", "pos_tags", "lemmas", "ners",
-            "dependencies"] + (["weight"] if has_weight else []) + (
-        ["ckey"] if has_ckey else [])
+            "dependencies"] + (["weight"] if has_weight else [])
     return parsed.select(cols).mapInPandas(run, schema=EVENTUALITIES)
 
 

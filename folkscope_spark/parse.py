@@ -7,9 +7,14 @@ run inside ``mapInPandas`` — each Arrow batch is parsed in-process, so
 parallelism is Spark partitions instead of worker pools, and there is no
 socket boundary.
 
-Output schema is D6 (:data:`folkscope_spark.schemas.PARSED`), with
-``sid = "{item_a}-{relation}-{item_b}|{row}"`` per
-``generation_parser.py:137``.
+Output schema is D6 (:data:`folkscope_spark.schemas.PARSED`) without its
+``text``/``tokens``/``mentions`` columns, plus ``weight``: each distinct
+(relation, tail) is parsed once, keyed ``sid = md5(relation || tail)``, and
+``weight`` is its corpus multiplicity.  The reference parses once per
+generated row, keyed ``"{item_a}-{relation}-{item_b}|{row}"``
+(``generation_parser.py:137``); here the per-row subjects and scores
+re-attach to the parsed rows by the md5 key downstream
+(``pipeline.build_event_triples``).
 """
 
 from __future__ import annotations
@@ -24,48 +29,28 @@ from .nlp import parse_sentence
 from .schemas import PARSED
 from .textnorm import clean_text
 
-# PARSED + corpus-multiplicity weight (dedupe-aware parsing) + content key.
-# ``ckey`` = md5(relation \x1f tail), computed in the JVM: a parsed row is a
-# pure function of (relation, tail), so downstream per-worker memos (match
-# extraction, anchored enumeration) can key on this one 32-char string
-# instead of hashing the full (pos_tags, lemmas, ners, dependencies) content
-# per row — the tuple-key construction itself was ~1/3 of the residual match
-# kernel cost in the reference-parity configuration.
+# The matcher and miner never read tokens, mentions or text: at web scale the
+# Arrow transfer + cache of the parsed table is the dominant non-scaling
+# cost, and these are its fattest columns.
+_OUT_COLS = ["sid", "relation", "weight", "pos_tags", "lemmas", "ners",
+             "dependencies"]
 PARSED_W = T.StructType(
     PARSED.fields[:2]
-    + [T.StructField("weight", T.DoubleType()), T.StructField("ckey", T.StringType())]
-    + PARSED.fields[2:]
+    + [T.StructField("weight", T.DoubleType())]
+    + [f for f in PARSED.fields[2:] if f.name in _OUT_COLS]
 )
-
-# Per-worker memo for parse_sentence: a pure function of the cleaned text,
-# and web corpora repeat identical continuations heavily — in the
-# reference-parity (no global dedupe) configuration the same tail recurs
-# tens to hundreds of times per partition (guide §1.2 step 2).  Bounded; on
-# overflow it keeps serving hits and stops inserting.  Values are read-only
-# parse dicts shared across rows.
-_PARSE_MEMO: dict[str, dict] = {}
-_PARSE_MEMO_CAP = 150_000
-
-
-def _parse_cached(cleaned: str) -> dict:
-    p = _PARSE_MEMO.get(cleaned)
-    if p is None:
-        p = parse_sentence(cleaned)
-        # Arrow-ready dependency structs, built once per distinct sentence
-        # (the per-row rebuild was measurable at parity row counts)
-        p["_dep_structs"] = [
-            {"gov": g, "rel": r, "dep": d} for g, r, d in p["dependencies"]
-        ]
-        if len(_PARSE_MEMO) < _PARSE_MEMO_CAP:
-            _PARSE_MEMO[cleaned] = p
-    return p
 
 
 def parse_assertions(
-    assertions: DataFrame, dedupe: bool = True, slim: bool = False,
-    skip_words=None, kernel_acc=None, thin_content: bool = False,
+    assertions: DataFrame, skip_words=None, kernel_acc=None
 ) -> DataFrame:
-    """assertions(tail,...) -> parsed rows.
+    """assertions(relation, tail, ...) -> parsed rows, one per distinct
+    (relation, tail).
+
+    At web scale identical LLM continuations are common, so parsing each
+    distinct pair once cuts the hottest Python kernel by the duplication
+    factor, while ``weight`` keeps corpus-frequency semantics exact
+    (downstream counts sum it).
 
     The cleaner runs first inside the same UDF (byte-contract P6); empty or
     unparsable rows are dropped (validity guard P13, pattern_filter.py:65).
@@ -74,67 +59,17 @@ def parse_assertions(
     dropped when its raw token set intersects the skip set — the reference's
     exact check (``set(tokens) & skip_words``, case-sensitive).  Default None
     mirrors the reference default (empty set — opt-in).
-
-    ``dedupe=True`` (default) parses each **distinct** (relation, tail) once
-    and carries ``weight`` = corpus multiplicity — at web scale identical LLM
-    continuations are common, so this cuts the hottest Python kernel by the
-    duplication factor while keeping corpus-frequency semantics exact
-    (downstream counts sum the weight; results re-attach to assertion rows by
-    ``sid = md5(relation || tail)``).  ``dedupe=False`` reproduces the
-    reference's one-parse-per-row behavior with
-    ``sid = "{a}-{rel}-{b}|{seq}"`` (generation_parser.py:137).
-
-    ``thin_content=True`` (slim mode only) emits the content array columns
-    (pos_tags/lemmas/ners/dependencies) on the FIRST row of each content key
-    per output batch and null on the key's remaining rows — in the
-    one-parse-per-row configuration those arrays are ~98% duplicates and
-    dominate the Arrow/cache bytes of the whole chain.  The match/mining
-    kernels reconstruct null rows from their per-task content dicts, seeded
-    by the guaranteed-earlier fat row of the same partition; only valid when
-    the consumer reads this output through the SAME partitioning it was
-    produced with (in-memory cache / direct pipe — not a re-split parquet
-    read), which is why the pipeline only enables it in storeless runs.
     """
-    if thin_content and not slim:
-        raise ValueError("thin_content requires slim=True")
-
-    ckey = F.md5(F.concat_ws("\x1f", "relation", "tail"))
-    if dedupe:
-        src = (
-            assertions.groupBy("relation", "tail")
-            .count()
-            .select(
-                F.md5(F.concat_ws("\x1f", "relation", "tail")).alias("sid"),
-                "relation",
-                "tail",
-                F.col("count").cast("double").alias("weight"),
-                ckey.alias("ckey"),
-            )
-        )
-    else:
-        src = assertions.select(
-            F.concat_ws(
-                "|",
-                F.concat_ws("-", "item_a", "relation", "item_b"),
-                F.col("seq_no"),
-            ).alias("sid"),
+    src = (
+        assertions.groupBy("relation", "tail")
+        .count()
+        .select(
+            F.md5(F.concat_ws("\x1f", "relation", "tail")).alias("sid"),
             "relation",
             "tail",
-            F.lit(1.0).alias("weight"),
-            ckey.alias("ckey"),
+            F.col("count").cast("double").alias("weight"),
         )
-
-    # slim mode drops columns the matcher never reads (tokens, mentions,
-    # text): at web scale the Arrow transfer + cache of the parsed table is
-    # the dominant non-scaling cost, and these are its fattest columns.
-    if slim:
-        out_cols = ["sid", "relation", "weight", "ckey", "pos_tags", "lemmas",
-                    "ners", "dependencies"]
-    else:
-        out_cols = ["sid", "relation", "weight", "ckey", "text", "tokens",
-                    "pos_tags", "lemmas", "ners", "dependencies", "mentions"]
-    schema = T.StructType([f for f in PARSED_W.fields if f.name in out_cols])
-
+    )
     skip = frozenset(skip_words) if skip_words else None
 
     def run(batches):
@@ -142,70 +77,35 @@ def parse_assertions(
             # the timed block covers decoded-batch compute only; the yield is
             # outside so suspended time (Arrow encode/decode) never counts
             with batch_timer(kernel_acc):
-                # grouped by content key: clean/parse/guard once per distinct
-                # (relation, tail), then emit with C-level list tiling — the
-                # per-duplicate-row Python work is a dict lookup + two
-                # appends (heavy duplication is the norm in the
-                # reference-parity configuration; dedupe mode has one row
-                # per key and goes through unchanged)
-                per_key: dict = {}
-                order: list = []
+                cols: dict[str, list] = {c: [] for c in _OUT_COLS}
                 # scalar columns as plain lists (pandas Series iteration
-                # boxes per element); `tail`/`relation` are only read on the
-                # first row of each key
-                sids_l = pdf["sid"].tolist()
-                rels_l = pdf["relation"].tolist()
-                tails_l = pdf["tail"].tolist()
-                ws_l = pdf["weight"].tolist()
-                for i, ck in enumerate(pdf["ckey"].tolist()):
-                    e = per_key.get(ck)
-                    if e is None:
-                        cleaned = clean_text(tails_l[i])
-                        parsed = None
-                        if cleaned:
-                            p = _parse_cached(cleaned)
-                            if p["dependencies"] and not (
-                                skip and set(p["tokens"]) & skip
-                            ):  # P8 (extractor.py:393-395)
-                                parsed = p
-                        e = per_key[ck] = (rels_l[i], parsed, [], [])
-                        order.append(ck)
-                    if e[1] is not None:
-                        e[2].append(sids_l[i])
-                        e[3].append(ws_l[i])
-                cols: dict[str, list] = {c: [] for c in out_cols}
-                for ck in order:
-                    rel, parsed, sids, ws = per_key[ck]
-                    if parsed is None:
+                # boxes per element)
+                for sid, rel, tail, w in zip(
+                    pdf["sid"].tolist(), pdf["relation"].tolist(),
+                    pdf["tail"].tolist(), pdf["weight"].tolist(),
+                ):
+                    cleaned = clean_text(tail)
+                    if not cleaned:
                         continue
-                    m = len(sids)
-                    cols["sid"].extend(sids)
-                    cols["relation"].extend([rel] * m)
-                    cols["weight"].extend(ws)
-                    cols["ckey"].extend([ck] * m)
-                    if thin_content and m > 1:
-                        tail_n = [None] * (m - 1)
-                        cols["pos_tags"].append(parsed["pos_tags"])
-                        cols["pos_tags"].extend(tail_n)
-                        cols["lemmas"].append(parsed["lemmas"])
-                        cols["lemmas"].extend(tail_n)
-                        cols["ners"].append(parsed["ners"])
-                        cols["ners"].extend(tail_n)
-                        cols["dependencies"].append(parsed["_dep_structs"])
-                        cols["dependencies"].extend(tail_n)
+                    p = parse_sentence(cleaned)
+                    if not p["dependencies"] or (
+                        skip and set(p["tokens"]) & skip
+                    ):  # P13; P8 (extractor.py:393-395)
                         continue
-                    cols["pos_tags"].extend([parsed["pos_tags"]] * m)
-                    cols["lemmas"].extend([parsed["lemmas"]] * m)
-                    cols["ners"].extend([parsed["ners"]] * m)
-                    cols["dependencies"].extend([parsed["_dep_structs"]] * m)
-                    if not slim:
-                        cols["text"].extend([parsed["text"]] * m)
-                        cols["tokens"].extend([parsed["tokens"]] * m)
-                        cols["mentions"].extend([parsed["mentions"]] * m)
-                out = pd.DataFrame(cols, columns=out_cols)
+                    cols["sid"].append(sid)
+                    cols["relation"].append(rel)
+                    cols["weight"].append(w)
+                    cols["pos_tags"].append(p["pos_tags"])
+                    cols["lemmas"].append(p["lemmas"])
+                    cols["ners"].append(p["ners"])
+                    cols["dependencies"].append(
+                        [{"gov": g, "rel": r, "dep": d}
+                         for g, r, d in p["dependencies"]]
+                    )
+                out = pd.DataFrame(cols, columns=_OUT_COLS)
             yield out
 
-    return src.mapInPandas(run, schema=schema)
+    return src.mapInPandas(run, schema=PARSED_W)
 
 
 def clean_pages(pages: DataFrame) -> DataFrame:

@@ -165,153 +165,46 @@ def pattern_sig(pat: Pattern) -> str:
     return json.dumps([list(pat[0]), [list(e) for e in pat[1]]])
 
 
-# per-worker enumeration memo, {max_extra: {content_key: [(sig, size)]}} —
-# see the docstring inside count_anchored_patterns.enum
-_ENUM_MEMO: dict[int, dict] = {}
-
-
-def _enum_memo(max_extra: int) -> dict:
-    """Resolve the per-worker enumeration memo THROUGH a module-level
-    function (pickled by reference): a closure referencing ``_ENUM_MEMO``
-    directly gets the dict cloudpickled by value into every task and the
-    memo never survives a task boundary."""
-    return _ENUM_MEMO.setdefault(max_extra, {})
-
-
 def sig_to_pattern(sig: str) -> Pattern:
     pos, edges = json.loads(sig)
     return (tuple(pos), tuple((int(u), el, int(v)) for u, el, v in edges))
 
 
-def count_anchored_patterns(
-    parsed: DataFrame, max_extra: int = 3, pre_dedupe: bool = False
-) -> DataFrame:
-    """parsed (D6) -> (relation, sig, size, cnt): the distributed replacement
-    for gSpan transaction counting.  Map-side enumeration emits one row per
-    (sentence, skeleton-pattern, pre-skeleton size); the shuffle agg is a
-    plain hash aggregate with partial combine.  ``size`` is the candidate's
-    node count before skeletonization — the unit of the reference's adaptive
-    per-size mining schedule (pattern_filter.py:136-153).
-
-    ``pre_dedupe=True`` (for heavily duplicated one-parse-per-row inputs):
-    since the counts only ever sum ``weight`` per signature, identical
-    sentences can be weight-summed relationally BEFORE the enumeration —
-    one cheap groupBy on the content key, then the Python kernel runs once
-    per distinct sentence in the whole job instead of once per distinct
-    sentence per worker (guide §2.3 aggregate before you shuffle; the sum is
-    distributive so the result is identical).  first(ignorenulls) also
-    reconstitutes thin-content rows (parse_assertions thin_content)."""
+def count_anchored_patterns(parsed: DataFrame, max_extra: int = 3) -> DataFrame:
+    """parsed (D6 + ``weight``) -> (relation, sig, size, cnt): the
+    distributed replacement for gSpan transaction counting.  Map-side
+    enumeration emits one row per (sentence, skeleton-pattern, pre-skeleton
+    size) carrying the sentence's ``weight``; the shuffle agg is a
+    weight-summing hash aggregate with partial combine.  ``size`` is the
+    candidate's node count before skeletonization — the unit of the
+    reference's adaptive per-size mining schedule
+    (pattern_filter.py:136-153)."""
     lens = anchor_lens()
 
-    if pre_dedupe and "ckey" in parsed.columns:
-        w = (
-            F.sum("weight") if "weight" in parsed.columns
-            else F.count("*").cast("double")
-        )
-        parsed = parsed.groupBy("ckey").agg(
-            F.first("relation").alias("relation"),
-            F.first("pos_tags", ignorenulls=True).alias("pos_tags"),
-            F.first("dependencies", ignorenulls=True).alias("dependencies"),
-            w.alias("weight"),
-        )
-
-    has_weight = "weight" in parsed.columns
-    has_ckey = "ckey" in parsed.columns
-
     def enum(batches):
-        # per-worker memo (module-level, so it survives task boundaries on a
-        # reused worker — guide §4.5): the anchored enumeration (and its json
-        # signature rendering) is a pure function of (sentence content,
-        # max_extra); in the reference-parity configuration identical
-        # sentences recur heavily (guide §1.2 step 2).  Keyed by the parse
-        # stage's JVM-computed content key when present (it determines the
-        # parsed row), else the content tuple; partitioned by max_extra so
-        # runs with different enumeration bounds never alias.  Bounded like
-        # the parse/match memos.
-        memo = _enum_memo(max_extra)
-        # task-scoped content dict (see match_patterns): thinned null-content
-        # rows must reconstruct within their own partition even past the
-        # bounded module memo
-        task_hits: dict = {}
-        import numpy as np
-
         for pdf in batches:
             rels, sigs, sizes, ws = [], [], [], []
-            weights = pdf["weight"] if has_weight else [1.0] * len(pdf)
-            ckeys = pdf["ckey"] if has_ckey else pdf["relation"]
-            # grouped by content key (same two-pass shape as the parse/match
-            # kernels): enumerate once per distinct sentence, emit with
-            # C-level tiling per duplicate row
-            per_key: dict = {}
-            order: list = []
-            rels_l = pdf["relation"].tolist()
-            ws_l = weights.tolist() if has_weight else weights
-            cks_l = ckeys.tolist() if has_ckey else rels_l
-            pos_a = pdf["pos_tags"].to_numpy()
-            dep_a = pdf["dependencies"].to_numpy()
-            for i, ck in enumerate(cks_l):
-                rel = rels_l[i]
+            for rel, pos, deps, w in zip(
+                pdf["relation"].tolist(), pdf["pos_tags"], pdf["dependencies"],
+                pdf["weight"].tolist(),
+            ):
                 alen = lens.get(rel, 0)
                 if alen == 0:
                     continue
-                if has_ckey:
-                    key = ck
-                else:
-                    key = (rel, tuple(pos_a[i]),
-                           tuple((d["gov"], d["rel"], d["dep"]) for d in dep_a[i]))
-                e = per_key.get(key)
-                if e is None:
-                    hits = task_hits.get(key)
-                    if hits is None:
-                        hits = memo.get(key)
-                    if hits is None:
-                        pos = pos_a[i]
-                        if pos is None:
-                            raise RuntimeError(
-                                "thinned parsed row with no preceding "
-                                "content row for key %r" % (key,)
-                            )
-                        deps = [(d["gov"], d["rel"], d["dep"]) for d in dep_a[i]]
-                        hits = [
-                            (pattern_sig(pat), raw_size)
-                            for pat, raw_size in enumerate_anchored(
-                                list(pos), deps, alen, max_extra,
-                                with_size=True,
-                            )
-                        ]
-                        # lower cap than the parse/match memos: each entry
-                        # holds ~40 signature strings (KBs, not bytes)
-                        if len(memo) < 50_000:
-                            memo[key] = hits
-                    task_hits[key] = hits
-                    e = per_key[key] = (rel, hits, [])
-                    order.append(key)
-                e[2].append(float(ws_l[i]))
-            for key in order:
-                rel, hits, kws = per_key[key]
-                k = len(hits)
-                if k == 0:
-                    continue
-                m = len(kws)
-                rels.extend([rel] * (k * m))
-                hs = [h[0] for h in hits]
-                hz = [h[1] for h in hits]
-                sigs.extend(hs * m)
-                sizes.extend(hz * m)
-                if k == 1:
-                    ws.extend(kws)
-                else:
-                    ws.extend(
-                        np.repeat(np.asarray(kws, dtype=np.float64), k).tolist()
-                    )
+                for pat, raw_size in enumerate_anchored(
+                    list(pos), [(d["gov"], d["rel"], d["dep"]) for d in deps],
+                    alen, max_extra, with_size=True,
+                ):
+                    rels.append(rel)
+                    sigs.append(pattern_sig(pat))
+                    sizes.append(raw_size)
+                    ws.append(w)
             yield pd.DataFrame(
                 {"relation": rels, "sig": sigs, "size": sizes, "w": ws}
             )
 
-    cols = ["relation", "pos_tags", "dependencies"] + (
-        ["weight"] if has_weight else []) + (["ckey"] if has_ckey else [])
     return (
-        parsed.select(cols)
+        parsed.select("relation", "pos_tags", "dependencies", "weight")
         .mapInPandas(enum, schema="relation string, sig string, size int, w double")
         .groupBy("relation", "sig", "size")
         .agg(F.sum("w").cast("long").alias("count"))

@@ -74,7 +74,12 @@ def run_pipeline(
     """Returns {"triples": DataFrame, "stages": {stage: seconds}, ...}.
 
     ``out_dir=None`` runs storeless: stage outputs are cached in memory
-    instead of snapshot-committed (fast smoke/test mode, no resume)."""
+    instead of snapshot-committed (fast smoke/test mode, no resume).
+
+    ``dedupe_parse`` selects nothing: every run parses, mines and matches
+    each distinct (relation, tail) once and re-attaches the per-row subjects
+    and scores by its md5 key.  The keyword is accepted only so existing
+    callers that pass it keep working."""
     store = SnapshotStore(out_dir) if out_dir else None
     timings: dict[str, float] = {}
     # per-kernel wall/cputime accumulators: after the run,
@@ -83,7 +88,7 @@ def run_pipeline(
     # framework (Arrow/shuffle/schedule) overhead
     kernel_timers = KernelTimers(spark)
     fp = (f"v1:n_pages={n_pages}:n_items={n_items}:minp={min_plausibility}"
-          f":extra={max_extra}:dedupe={dedupe_parse}:dense={dense_tails}"
+          f":extra={max_extra}:dense={dense_tails}"
           f":skip={','.join(sorted(skip_words)) if skip_words else ''}"
           f":sidx={start_index_mode}")
 
@@ -212,42 +217,24 @@ def run_pipeline(
         scored = score.threshold(scored, min_plausibility)
 
     # -- parsing -------------------------------------------------------------
-    # thin_content (see parse_assertions): in the one-parse-per-row
-    # configuration the parsed table's content arrays are ~98% duplicates —
-    # emit them once per key per batch and let the match/mine kernels
-    # reconstruct.  Only safe storeless (the cache preserves the producing
-    # partitioning; a committed parquet read may re-split files) and only
-    # when no consumer reads content columns relationally (length_cdf under
-    # adaptive_mining; conceptualize_text).
-    thin = (
-        out_dir is None
-        and not dedupe_parse
-        and not adaptive_mining
-        and not with_concept_text
-    )
     parsed = timed(
         "parse",
         lambda: store.stage(
             spark, "parsed", fp,
             lambda: parse.parse_assertions(
-                scored, dedupe=dedupe_parse, slim=True, skip_words=skip_words,
-                kernel_acc=kernel_timers["parse"], thin_content=thin,
+                scored, skip_words=skip_words,
+                kernel_acc=kernel_timers["parse"],
             ),
         ),
     )
 
     # -- pattern mining ------------------------------------------------------
-    def build_pattern_counts():
-        # pre_dedupe in the duplicated parity configuration: the enumeration
-        # kernel then runs once per distinct sentence in the whole job, not
-        # once per distinct sentence per worker
-        return patterns.count_anchored_patterns(
-            parsed, max_extra=max_extra, pre_dedupe=thin
-        )
-
     pattern_counts = timed(
         "mine_count",
-        lambda: store.stage(spark, "pattern_counts", fp, build_pattern_counts),
+        lambda: store.stage(
+            spark, "pattern_counts", fp,
+            lambda: patterns.count_anchored_patterns(parsed, max_extra=max_extra),
+        ),
     )
     sent_counts = {
         r["relation"]: int(r["n"])
@@ -281,16 +268,12 @@ def run_pipeline(
     # Keeping the per-sentence mapping relational (instead of collect_set of
     # sids per eid) bounds every row — a Zipf-hot eventuality's sentence list
     # never funnels into one aggregation row.
-    # in the duplicated parity configuration, run the distinct-sentence VF2
-    # sweep once as its own job and broadcast the results (see
-    # match_patterns) instead of letting every worker redo it
     matched = timed(
         "match",
         lambda: store.stage(
             spark, "matched", fp,
             lambda: match_patterns(
-                parsed, mined, kernel_acc=kernel_timers["match"],
-                precompute="broadcast" if thin else None,
+                parsed, mined, kernel_acc=kernel_timers["match"]
             ),
         ),
     )
@@ -303,10 +286,9 @@ def run_pipeline(
 
     # -- eventuality-level triples -------------------------------------------
     def build_event_triples():
-        # each matched row carries the parse-stage key in `sid`; re-attach to
-        # the assertion rows (pair subjects + scores) by the matching key:
-        # dedupe mode -> tkey = md5(relation || tail); parity mode ->
-        # sid = "{a}-{rel}-{b}|{seq}" (generation_parser.py:137)
+        # each matched row carries the parse-stage key md5(relation || tail)
+        # in `sid`; re-attach to the assertion rows (pair subjects + scores)
+        # by the same key
         # the matched stream's per-occurrence `frequency` is the parse-stage
         # weight of that sentence, not the merged eventuality frequency —
         # surface it as `weight` so the committed stage schema says what the
@@ -315,16 +297,8 @@ def run_pipeline(
             "eid", "relation", "words",
             F.col("frequency").alias("weight"), F.col("sid").alias("k"),
         ).withColumn("obj_text", F.concat_ws(" ", "words"))
-        if dedupe_parse:
-            key = F.md5(F.concat_ws("\x1f", "relation", "tail"))
-        else:
-            key = F.concat_ws(
-                "|",
-                F.concat_ws("-", "item_a", "relation", "item_b"),
-                F.col("seq_no"),
-            )
         sc = scored.select(
-            key.alias("k"),
+            F.md5(F.concat_ws("\x1f", "relation", "tail")).alias("k"),
             F.concat_ws("-", "item_a", "item_b").alias("subj"),
             "plausibility",
         )
@@ -407,9 +381,8 @@ def run_pipeline(
                 gram_len = max_instance_tokens(probase)
                 vocab = conceptualization_vocabulary(matched, "words", max_len=gram_len)
                 if with_concept_text:
-                    text_words = "tokens" if "tokens" in parsed.columns else "lemmas"
                     vocab = vocab.union(
-                        conceptualization_vocabulary(parsed, text_words, max_len=gram_len)
+                        conceptualization_vocabulary(parsed, "lemmas", max_len=gram_len)
                     ).distinct()
             topk_map = spark.sparkContext.broadcast(
                 collect_topk_map(probase_topk(probase), vocabulary=vocab)

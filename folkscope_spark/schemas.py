@@ -89,7 +89,10 @@ MENTION = T.StructType(
 # D6 — parsed sentence record (src/pattern/utils.py:269-298)
 PARSED = T.StructType(
     [
-        T.StructField("sid", T.StringType()),  # "{a}-{rel}-{b}|{row}" (generation_parser.py:137)
+        # md5(relation || tail) of the one distinct (relation, tail) the row
+        # parses; the reference keys per generated row instead,
+        # "{a}-{rel}-{b}|{row}" (generation_parser.py:137)
+        T.StructField("sid", T.StringType()),
         T.StructField("relation", T.StringType()),
         T.StructField("text", T.StringType()),
         T.StructField("tokens", T.ArrayType(T.StringType())),

@@ -6,7 +6,7 @@ Heavier than unit tests (spins up Spark) but still < a couple of minutes.
 import shutil
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from tests.oracle_port import oracle_triples
 
@@ -64,10 +64,17 @@ def test_parity_flag_builds_same_kg(spark, result):
         with_concepts=True, with_canonicalize=False, max_extra=2,
         dedupe_parse=False,
     )
-    for name in ("triples", "concept_triples", "events"):
-        a, b = (_set_comparable(r[name]) for r in (result, parity))
-        assert a.exceptAll(b).count() == 0, name
-        assert b.exceptAll(a).count() == 0, name
+    try:
+        for name in ("triples", "concept_triples", "events"):
+            a, b = (_set_comparable(r[name]) for r in (result, parity))
+            assert a.exceptAll(b).count() == 0, name
+            assert b.exceptAll(a).count() == 0, name
+    finally:
+        # the module's later tests need only the fixture run cached; a
+        # second cached run keeps the shared JVM's heap about 1 GB higher
+        for df in parity.values():
+            if isinstance(df, DataFrame):
+                df.unpersist()
 
 
 def _set_comparable(df):

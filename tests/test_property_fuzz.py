@@ -7,8 +7,8 @@ regression surfaces as a minimal counterexample instead of a contract hash
 mismatch.  Both oracles are independent of ``folkscope_spark``:
 ``tests.reference_port`` is the declared brute-force transcription of the
 reference matcher (pattern_retriever.py / object.py), and
-``tests.test_textnorm._reference_clean`` literally re-executes the reference
-cleaner (utils.py:195-214)."""
+``tests.reference_cleaner.reference_clean`` literally re-executes the
+reference cleaner (utils.py:195-214)."""
 
 from __future__ import annotations
 
@@ -27,7 +27,7 @@ from folkscope_spark.graphs import (
 from folkscope_spark.textnorm import clean_text
 
 from tests import reference_port as ref
-from tests.test_textnorm import _reference_clean
+from tests.reference_cleaner import reference_clean as _reference_clean
 
 # ------------------------------------------------------------- clean_text
 

@@ -172,7 +172,9 @@ def test_match_fat_thinning_keyed_by_relation_and_eid(spark):
     sentence is extracted under two relations inside a single partition, BOTH
     (eid, relation) groups must receive a non-null fat row — thinning keyed by
     eid alone left the second relation's group all-null, and
-    first(ignorenulls) propagated nulls into conceptualize."""
+    first(ignorenulls) propagated nulls into conceptualize.  A second
+    sentence with s1's content (``s3``) merges into s1's group, which keeps
+    its single non-null fat row."""
     from folkscope_spark.match import match_patterns, merge_eventualities
 
     pat = (("NN", "VBP"), ((1, "nsubj", 0),))
@@ -184,6 +186,8 @@ def test_match_fat_thinning_keyed_by_relation_and_eid(spark):
         ("s1", "capableOf", ["NNS", "VBP"], ["dog", "run"], ["O", "O"],
          [{"gov": 1, "rel": "nsubj", "dep": 0}]),
         ("s2", "usedFor", ["NNS", "VBP"], ["dog", "run"], ["O", "O"],
+         [{"gov": 1, "rel": "nsubj", "dep": 0}]),
+        ("s3", "capableOf", ["NNS", "VBP"], ["dog", "run"], ["O", "O"],
          [{"gov": 1, "rel": "nsubj", "dep": 0}]),
     ]
     schema = (
@@ -200,6 +204,10 @@ def test_match_fat_thinning_keyed_by_relation_and_eid(spark):
         assert r["pattern_sig"] is not None, r["relation"]
         assert r["pos_tags"] is not None and r["dependencies"] is not None
         assert r["skeleton_indices"] is not None
+    by_rel = {r["relation"]: r for r in merged}
+    assert by_rel["capableOf"]["frequency"] == 2.0
+    assert by_rel["capableOf"]["n_sentences"] == 2
+    assert by_rel["usedFor"]["n_sentences"] == 1
 
 
 def test_connected_components_random_graph_matches_union_find(spark):

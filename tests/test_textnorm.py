@@ -1,13 +1,14 @@
 """Golden tests for the byte-identical text-extraction contract (SURVEY.md §5.2 #1)."""
 
 import ast
-import re
 import warnings
 from pathlib import Path
 
 import pytest
 
 from folkscope_spark.textnorm import URL_REGEX, clean_text, split_long_text, split_sentences
+from tests.reference_cleaner import URL_REGEX_PATTERN
+from tests.reference_cleaner import reference_clean as _reference_clean
 
 REF_UTILS = Path("/root/reference/src/pattern/utils.py")
 
@@ -35,17 +36,11 @@ def _reference_url_pattern() -> str:
 
 @pytest.mark.skipif(not REF_UTILS.exists(), reason="reference not mounted")
 def test_url_regex_byte_identical_to_reference():
-    assert URL_REGEX.pattern == _reference_url_pattern()
+    assert URL_REGEX.pattern == _reference_url_pattern() == URL_REGEX_PATTERN
 
 
-def _reference_clean(text: str) -> str:
-    """The reference cleaner re-executed literally (utils.py:195-214) as oracle."""
-    ref_url = re.compile(_reference_url_pattern(), re.IGNORECASE)
-    text = re.sub(r"[^\x00-\x7F]+", " ", text)
-    text = re.sub(r"<ref(.*?)>", "<ref>", text)
-    text = re.sub(ref_url, "<url>", text)
-    text = re.sub(r"<url>[\(\)\[\]]*<url>", "<url>", text)
-    return text.strip()
+def test_url_regex_byte_identical_to_transcribed_reference():
+    assert URL_REGEX.pattern == URL_REGEX_PATTERN
 
 
 ADVERSARIAL = [

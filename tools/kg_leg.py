@@ -1,9 +1,8 @@
 """One KG-pipeline leg in its own process — building block for the
 two-process "multi-node" scaling stand-in (tools/two_process_scaling.py).
 
-Runs the reference-parity (CPU-bound) configuration of the pipeline at the
-given master/pages and prints one JSON line with wall seconds and stage
-timings.  Kept minimal so the subprocess boundary is the only thing the
+Runs the pipeline at the given master/pages and prints one JSON line with
+wall seconds and stage timings.  Kept minimal so the subprocess boundary is the only thing the
 experiment adds.
 """
 
@@ -21,11 +20,6 @@ def main() -> None:
     ap.add_argument("--shuffle", type=int, default=24)
     ap.add_argument("--pages", type=int, default=50000)
     ap.add_argument("--warmup-pages", type=int, default=300)
-    ap.add_argument(
-        "--config", choices=("parity", "prod"), default="parity",
-        help="parity = per-row parse/match (CPU-bound scaling config); "
-        "prod = dedupe-aware parsing (the bench throughput config)",
-    )
     ap.add_argument(
         "--repo", default=None,
         help="run the pipeline from this checkout instead of the installed "
@@ -76,12 +70,10 @@ def main() -> None:
         f"not the requested checkout {repo_root} — A/B leg would be invalid"
     )
 
-    dedupe = args.config == "prod"
     # warmup: Python-worker startup / imports / JIT (one-time executor costs)
     run_pipeline(
         spark, out_dir=None, n_pages=args.warmup_pages, n_items=60,
         with_concepts=True, with_canonicalize=True, max_extra=1,
-        dedupe_parse=dedupe,
     )["triples"].count()
     spark.catalog.clearCache()
 
@@ -90,13 +82,11 @@ def main() -> None:
         spark, out_dir=None, n_pages=args.pages,
         n_items=max(50, args.pages // 17),
         with_concepts=True, with_canonicalize=True, max_extra=2,
-        dedupe_parse=dedupe,
     )
     r["triples"].count()
     wall = time.time() - t0
     out = {
         "master": args.master,
-        "config": args.config,
         "repo": args.repo,
         "executor_module": executor_module,
         "pages": args.pages,

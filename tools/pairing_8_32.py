@@ -2,8 +2,8 @@
 
 The full bench budget-gates this pairing last, so on a window where the
 full-scale (100k-page) 4->16 legs consume the budget it is skipped.  This
-tool runs ONLY the 8->32 pairing (same run_kg code path as bench.py, same
-parity config) plus its pure-CPU ceiling, and prints one JSON line — so a
+tool runs ONLY the 8->32 pairing (same run_kg code path as bench.py) plus
+its pure-CPU ceiling, and prints one JSON line — so a
 clean window can still produce the north rule's stated two-parallelism
 measurement without re-running the whole bench.
 
