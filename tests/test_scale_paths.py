@@ -54,6 +54,60 @@ def test_connected_components_multiple_clusters_distributed(spark):
     }
 
 
+def test_canonicalize_surface_forms_matches_exact_jaccard_closure(spark):
+    """The rewrite table equals exact all-pairs Jaccard >= 0.9 over lowercased
+    whitespace tokens, closed transitively by union-find with the
+    lexicographic-min text as canonical, on both the driver LSH path (the
+    default) and the distributed path (``driver_threshold=0``)."""
+    from folkscope_spark.canonicalize import canonicalize_surface_forms
+
+    base = "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9".split()
+    chain_a = " ".join(base)  # 10 tokens
+    chain_b = " ".join(base + ["w10"])  # J(A,B) = 10/11
+    chain_c = " ".join(base + ["w10", "w11"])  # J(B,C) = 11/12, J(A,C) = 10/12
+    near = "v0 v1 v2 v3 v4 v5 v6 v7"
+    forms = [
+        "red apple pie", "Apple red pie", "pie RED apple",  # same token set
+        chain_c, chain_b, chain_a,
+        near, near + " v8",  # J = 8/9: below the threshold, never merged
+        "green tea", "a lone form",
+    ]
+    sets = [frozenset(t.lower().split()) for t in forms]
+    parent = list(range(len(forms)))
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a in range(len(forms)):
+        for b in range(a + 1, len(forms)):
+            if len(sets[a] & sets[b]) / len(sets[a] | sets[b]) >= 0.9:
+                ra, rb = find(a), find(b)
+                if ra != rb:
+                    lo, hi = (ra, rb) if forms[ra] < forms[rb] else (rb, ra)
+                    parent[hi] = lo
+    want = {
+        (t, forms[find(i)]) for i, t in enumerate(forms) if forms[find(i)] != t
+    }
+    # the planted structure is what the expectation encodes
+    assert len(sets[3] & sets[5]) / len(sets[3] | sets[5]) < 0.9
+    assert want == {
+        ("red apple pie", "Apple red pie"),
+        ("pie RED apple", "Apple red pie"),
+        (chain_b, chain_a),
+        (chain_c, chain_a),
+    }
+
+    df = spark.createDataFrame([(t,) for t in forms + forms[:3]], "obj string")
+    for kw in ({}, {"driver_threshold": 0}):
+        got = {
+            (r["text"], r["canonical_text"])
+            for r in canonicalize_surface_forms(df, "obj", **kw).collect()
+        }
+        assert got == want, kw
+
+
 def test_pr_curve_binned_matches_exact_at_bin_edges(spark):
     """With scores exactly on bin edges the binned sweep reproduces the exact
     per-row sweep's cumulative counts."""
