@@ -116,49 +116,14 @@ def verify_jaccard(
     )
 
 
-def _cc_driver(edges: DataFrame) -> DataFrame:
-    """Union-find on a collected edge list — the fast path when the verified
-    near-duplicate edge set is dimension-sized (it usually is: LSH+verify has
-    already reduced the problem to actual duplicate clusters).  The
-    distributed loop below is the 100TB path; the crossover is size-guarded in
-    :func:`connected_components`."""
-    spark = edges.sparkSession
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for r in edges.collect():
-        a, b = r["id_a"], r["id_b"]
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # deterministic: smaller id wins as root
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-    rows = [(x, find(x)) for x in parent]
-    return spark.createDataFrame(rows, "id string, comp string")
-
-
-def connected_components(
-    edges: DataFrame, max_iter: int = 30, driver_threshold: int = 200_000
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 30) -> DataFrame:
     """Connected components over an (id_a, id_b) edge list -> (id, comp) with
-    comp = min reachable id.
+    comp = min reachable id.  Its caller is the distributed path of
+    :func:`canonicalize_surface_forms` (form sets above its
+    ``driver_threshold``), whose edge list is not bounded by driver memory,
+    so the edges are never collected.
 
-    ``driver_threshold`` (VERDICT r5 wrong #2): each edge row carries two
-    full surface-form strings, so the driver fast path is bounded at the
-    same 200k scale as the outer ``canonicalize_surface_forms`` gate rather
-    than the former 2M-edge bound (2M rows of long eventuality texts could
-    be several GB of driver memory before union-find starts).
-
-    Distributed path is **min-label star contraction with edge rewriting**
+    The algorithm is **min-label star contraction with edge rewriting**
     (the property the round-1 version lacked): each round every current node
     adopts the minimum of its neighborhood (including itself), the edge list
     is rewritten through the new labels (contracting each star to its
@@ -169,11 +134,8 @@ def connected_components(
     edge list is empty.  Hitting ``max_iter`` with edges left raises instead
     of silently splitting clusters (ADVICE r1)."""
     edges = edges.cache()
-    n_edges = edges.count()
-    if n_edges <= driver_threshold:
-        return _cc_driver(edges)
     # size the loop's shuffles to the data, not the session default
-    n_part = max(4, n_edges // 500_000)
+    n_part = max(4, edges.count() // 500_000)
     e = (
         edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .union(edges.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
@@ -461,7 +423,6 @@ def canonicalize_surface_forms(
     verified = verify_jaccard(pairs, toks, "id", jaccard_threshold).cache()
     if not verified.limit(1).count():
         # no near-duplicates at all: empty rewrite table, skip the CC loop
-        spark = df.sparkSession
         return spark.createDataFrame([], "text string, canonical_text string")
     comps = connected_components(verified)
     # canonical member per component = lexicographic min id (== min text)

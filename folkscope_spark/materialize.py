@@ -23,20 +23,6 @@ from pyspark.sql import DataFrame, functions as F
 N_BUCKETS = 16
 
 
-def sid_to_pair(df: DataFrame) -> DataFrame:
-    """sid = "{a}-{rel}-{b}|{seq}" -> subj "{a}-{b}" + seq_no columns.
-
-    asins are dash-free by construction so the split is unambiguous."""
-    return (
-        df.withColumn("_head", F.substring_index("sid", "|", 1))
-        .withColumn("_seq", F.substring_index("sid", "|", -1).cast("int"))
-        .withColumn("item_a", F.split("_head", "-")[0])
-        .withColumn("item_b", F.element_at(F.split("_head", "-"), -1))
-        .withColumn("subj", F.concat_ws("-", "item_a", "item_b"))
-        .drop("_head")
-    )
-
-
 def build_triples(
     events_with_scores: DataFrame,
     canon_map: DataFrame | None = None,

@@ -107,17 +107,3 @@ def parse_assertions(
 
     return src.mapInPandas(run, schema=PARSED_W)
 
-
-def clean_pages(pages: DataFrame) -> DataFrame:
-    """pages -> (url, cleaned_text): the byte-contract extraction over the raw
-    page text (per-url invariant of BASELINE.json)."""
-
-    def run(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"url": pdf["url"], "cleaned_text": [clean_text(t or "") for t in pdf["text"]]}
-            )
-
-    return pages.select("url", "text").mapInPandas(
-        run, schema="url string, cleaned_text string"
-    )

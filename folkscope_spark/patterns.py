@@ -441,25 +441,6 @@ def merge_pattern_sets(mined: dict[str, dict]) -> dict:
     }
 
 
-def patterns_to_df(spark, mined: dict[str, dict]) -> DataFrame:
-    """Materialize the mined pattern dictionary as a D7 DataFrame (for the
-    snapshot layer and .lg-style golden exports)."""
-    rows = []
-    for rel, info in mined.items():
-        for pat, freq in zip(info["patterns"], info["freqs"]):
-            rows.append(
-                {
-                    "relation": rel,
-                    "pos_tags": list(pat[0]),
-                    "edges": [{"u": u, "elabel": el, "v": v} for u, el, v in pat[1]],
-                    "freq": int(freq),
-                }
-            )
-    from .schemas import PATTERNS
-
-    return spark.createDataFrame(rows, schema=PATTERNS)
-
-
 def write_lg(mined: dict[str, dict], rel: str) -> str:
     """Serialize one relation's patterns in the gSpan ``.lg`` text layout the
     reference writes (``pattern_filter.py:95-101``, ``write_patterns``

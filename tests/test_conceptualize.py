@@ -336,49 +336,6 @@ def test_aggregate_concepts_multi_cid_exact():
     assert out["c1"]["cscore"] == pytest.approx(sum(0.1 * (i % 7) * 2.0 for i in range(40)))
 
 
-def test_probase_vocab_semijoin_bounds_collected_map():
-    """VERDICT r2 wrong #3: with a huge Probase (1e6 instances) and a tiny
-    corpus, the collected driver map must be bounded by the observed
-    vocabulary (incl. multi-word phrase n-grams), not by Probase size."""
-    from pyspark.sql import functions as F
-
-    from folkscope_spark.conceptualize import (
-        collect_topk_map,
-        conceptualization_vocabulary,
-        max_instance_tokens,
-        probase_topk,
-    )
-    from folkscope_spark.session import get_spark
-
-    spark = get_spark(app="t", master="local[4]", shuffle_partitions=8)
-    big = spark.range(1_000_000).select(
-        F.concat(F.lit("inst"), "id").alias("instance"),
-        F.lit("noise concept").alias("concept"),
-        F.lit(1.0).alias("freq"),
-    )
-    hits = spark.createDataFrame(
-        [
-            ("dog", "animal", 3.0),
-            ("dog", "pet", 1.0),
-            ("ice cream", "dessert", 1.0),
-            ("cream", "food", 1.0),
-        ],
-        "instance string, concept string, freq double",
-    )
-    probase = big.union(hits)
-    corpus = spark.createDataFrame(
-        [(["the", "dog", "eats", "ice", "cream"],), (["dog", "runs"],)],
-        "words array<string>",
-    )
-    gram_len = max_instance_tokens(probase)
-    assert gram_len == 2  # "ice cream" / "noise concept"-free instances
-    vocab = conceptualization_vocabulary(corpus, "words", max_len=gram_len)
-    m = collect_topk_map(probase_topk(probase), vocabulary=vocab)
-    assert set(m) == {"dog", "ice cream", "cream"}  # bounded by vocabulary
-    assert m["dog"] == [("animal", 0.75), ("pet", 0.25)]
-    assert m["ice cream"] == [("dessert", 1.0)]
-
-
 def test_conceptualize_accepts_broadcast_topk(spark=None):
     """The UDF resolves a sc.broadcast-shipped map identically to a dict."""
     from folkscope_spark.conceptualize import conceptualize

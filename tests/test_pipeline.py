@@ -235,25 +235,13 @@ def test_connected_components_distributed_path(spark):
         [("a", "b"), ("b", "c"), ("x", "y"), ("p", "q"), ("q", "r"), ("r", "s")],
         "id_a string, id_b string",
     )
-    # force the iterative small-star/large-star path
-    comps = connected_components(edges, driver_threshold=0)
+    comps = connected_components(edges)
     got = {(r["id"], r["comp"]) for r in comps.collect()}
     assert got == {
         ("a", "a"), ("b", "a"), ("c", "a"),
         ("x", "x"), ("y", "x"),
         ("p", "p"), ("q", "p"), ("r", "p"), ("s", "p"),
     }
-
-
-def test_cc_driver_path_equivalent(spark):
-    from folkscope_spark.canonicalize import connected_components
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y")], "id_a string, id_b string"
-    )
-    fast = {(r["id"], r["comp"]) for r in connected_components(edges).collect()}
-    dist = {(r["id"], r["comp"]) for r in connected_components(edges, driver_threshold=0).collect()}
-    assert fast == dist
 
 
 def test_concept_triples_match_oracle(result):
@@ -443,11 +431,11 @@ def test_assertions_anti_join_resume(spark, tmp_path):
     assert a == b
 
 
-def test_pipeline_large_probase_vocab_path(spark):
-    """Above PROBASE_VOCAB_CUTOFF the pipeline takes the vocabulary-semi-join
-    path end-to-end; padding Probase with 150k noise instances (never in the
-    corpus) must not change the concept KG."""
-    from folkscope_spark.pipeline import PROBASE_VOCAB_CUTOFF, run_pipeline
+def test_pipeline_large_probase_auto_goes_relational(spark):
+    """The auto size gate: a Probase padded with 150k noise instances (never
+    in the corpus), past PROBASE_BROADCAST_CUTOFF, and given no size hint
+    takes the relational tier, and the concept KG is unchanged."""
+    from folkscope_spark.pipeline import PROBASE_BROADCAST_CUTOFF, run_pipeline
     from folkscope_spark.synthetic import probase_df
 
     kw = dict(
@@ -455,16 +443,29 @@ def test_pipeline_large_probase_vocab_path(spark):
         with_concepts=True, with_canonicalize=False,
     )
     base = run_pipeline(spark, None, **kw)
-    noise = spark.range(PROBASE_VOCAB_CUTOFF + 50_000).select(
+    assert base["probase_mode"] == "broadcast"
+    noise = spark.range(PROBASE_BROADCAST_CUTOFF + 50_000).select(
         F.lit("noiseconcept").alias("concept"),
         F.concat(F.lit("zz_noise_"), "id").alias("instance"),
         F.lit(1.0).alias("freq"),
     )
     big = probase_df(spark).select("concept", "instance", "freq").unionByName(noise)
     padded = run_pipeline(spark, None, probase=big, **kw)
+    assert padded["probase_mode"] == "relational"
     a = {tuple(x) for x in base["concept_triples"].collect()}
     b = {tuple(x) for x in padded["concept_triples"].collect()}
     assert a == b and a
+
+
+def test_probase_mode_rejects_unknown_value(spark):
+    """Only "auto" and "relational" are accepted: a forced broadcast would be
+    an unbounded collect above the cutoff, and a typo must not silently pick
+    a tier."""
+    from folkscope_spark.pipeline import run_pipeline
+
+    for mode in ("broadcast", "relatoinal"):
+        with pytest.raises(ValueError, match="probase_mode"):
+            run_pipeline(spark, None, n_pages=10, n_items=5, probase_mode=mode)
 
 
 def test_pipeline_relational_probase_parity(spark):

@@ -35,7 +35,7 @@ def test_connected_components_long_chain_distributed(spark):
     n = 200
     rows = [("n%04d" % (i + 1), "n%04d" % i) for i in range(n)]  # chain n0..n200
     edges = spark.createDataFrame(rows, "id_a string, id_b string")
-    comps = connected_components(edges, max_iter=12, driver_threshold=0)
+    comps = connected_components(edges, max_iter=12)
     got = {r["id"]: r["comp"] for r in comps.collect()}
     assert set(got.values()) == {"n0000"}
     assert len(got) == n + 1
@@ -46,7 +46,7 @@ def test_connected_components_multiple_clusters_distributed(spark):
 
     rows = [("a1", "a2"), ("a2", "a3"), ("b1", "b2"), ("c1", "c9"), ("c9", "c5")]
     edges = spark.createDataFrame(rows, "id_a string, id_b string")
-    got = {r["id"]: r["comp"] for r in connected_components(edges, driver_threshold=0).collect()}
+    got = {r["id"]: r["comp"] for r in connected_components(edges).collect()}
     assert got == {
         "a1": "a1", "a2": "a1", "a3": "a1",
         "b1": "b1", "b2": "b1",
@@ -304,7 +304,7 @@ def test_connected_components_random_graph_matches_union_find(spark):
     want = {min(members): members for members in oracle.values()}
 
     edges = spark.createDataFrame(rows, "id_a string, id_b string")
-    got_rows = connected_components(edges, driver_threshold=0).collect()
+    got_rows = connected_components(edges).collect()
     got = {}
     for r in got_rows:
         got.setdefault(r["comp"], set()).add(r["id"])
