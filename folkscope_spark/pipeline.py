@@ -36,11 +36,10 @@ from .metrics import KernelTimers
 from .snapshots import SnapshotStore
 
 # Probase dimensions up to this row count are collected whole and shipped with
-# sc.broadcast (a few MB of dict).  Above it nothing is collected: the top-K
-# table is equi-joined and each row gets a bounded per-row mini-map
-# (conceptualize.concept_minimaps), the one tier whose driver footprint does
-# not grow with Probase (a collected 5M-row dict reaches GBs; the real
-# Probase is ~33M rows).
+# sc.broadcast.  Above it nothing is collected: the top-K table is equi-joined
+# and each row gets a bounded per-row mini-map (conceptualize.concept_minimaps),
+# the one tier whose driver footprint does not grow with Probase (a collected
+# 5M-row dict reaches GBs; the real Probase is ~33M rows).
 PROBASE_BROADCAST_CUTOFF = 100_000
 
 

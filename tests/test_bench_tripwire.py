@@ -2,11 +2,21 @@
 must be flagged, plain noise must not."""
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import latest_committed_stages, stage_regressions
+# importing bench.py sets SPARK_DRIVER_MEM=16g for its own legs; keep that
+# out of the test process, or every later Spark test in the suite starts its
+# JVM with a 16g heap (the suite's JVM then outgrows a 16 GB host)
+_driver_mem = os.environ.get("SPARK_DRIVER_MEM")
+from bench import latest_committed_stages, stage_regressions  # noqa: E402
+
+if _driver_mem is None:
+    os.environ.pop("SPARK_DRIVER_MEM", None)
+else:
+    os.environ["SPARK_DRIVER_MEM"] = _driver_mem
 
 
 COMMITTED = {"parse": 13.5, "match": 1.0, "concept_triples": 8.4, "write": 6.9}

@@ -5,9 +5,10 @@ grew to 51 entries while the driver records only 50 (VERDICT r3, missing #1).
 These checks make any future overflow or dangling oracle a loud test failure.
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
 
