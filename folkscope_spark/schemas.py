@@ -104,24 +104,6 @@ PARSED = T.StructType(
     ]
 )
 
-# D7 — dependency pattern (src/pattern/pattern_filter.py:92-101)
-PATTERN_EDGE = T.StructType(
-    [
-        T.StructField("u", T.IntegerType()),
-        T.StructField("elabel", T.StringType()),
-        T.StructField("v", T.IntegerType()),
-    ]
-)
-
-PATTERNS = T.StructType(
-    [
-        T.StructField("relation", T.StringType()),
-        T.StructField("pos_tags", T.ArrayType(T.StringType())),
-        T.StructField("edges", T.ArrayType(PATTERN_EDGE)),
-        T.StructField("freq", T.LongType()),
-    ]
-)
-
 # D8 — eventuality (src/pattern/object.py:86-418; eid contract object.py:120-130)
 EVENTUALITIES = T.StructType(
     [

@@ -4,6 +4,13 @@ Single place where execution knobs live so tests, bench, and spark-submit all
 agree.  Defaults target the sandbox (local[N], 32 cores); on a real cluster
 the same settings hold except master/shuffle-partitions, which scale with
 executor count.
+
+Local masters also start the Python workers from
+``folkscope_spark.worker_daemon`` (pyspark's daemon minus a per-task re-read
+of every zip archive on ``sys.path``), with the package's import root on the
+executors' ``PYTHONPATH`` so the daemon can import it before any task runs.
+The session prewarm raises: a worker setup that cannot run a ``mapInPandas``
+fails ``get_spark``, not the first kernel stage.
 """
 
 from __future__ import annotations
@@ -11,6 +18,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# The directory (or --py-files zip) that holds the folkscope_spark package.
+IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # One-time per-process executor warmup (see _prewarm).  Module-level so the
 # cost is paid once per Python process, not once per session: bench harnesses
@@ -29,34 +39,33 @@ def _prewarm(spark: SparkSession) -> None:
     global _PROCESS_PREWARMED
     if _PROCESS_PREWARMED:
         return
-    _PROCESS_PREWARMED = True
     from pyspark.sql import functions as F
 
+    # no blanket except: a worker daemon or Python worker that cannot start
+    # must fail here, at session start, not at the first kernel stage
+    spark.range(64).groupBy((F.col("id") % 8).alias("k")).count().collect()
+    spark.range(64).join(F.broadcast(spark.range(8)), "id").count()
+
+    def _ident(batches):
+        yield from batches
+
+    spark.range(
+        64, numPartitions=spark.sparkContext.defaultParallelism
+    ).mapInPandas(_ident, "id long").count()
+
+    # parquet reader/writer class-loading + codegen (~1s in a fresh
+    # JVM, otherwise charged to the first real scan); 16 rows in /tmp,
+    # removed afterwards — init, not data
+    import shutil
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix="spark_prewarm_")
     try:
-        spark.range(64).groupBy((F.col("id") % 8).alias("k")).count().collect()
-        spark.range(64).join(F.broadcast(spark.range(8)), "id").count()
-
-        def _ident(batches):
-            yield from batches
-
-        spark.range(
-            64, numPartitions=spark.sparkContext.defaultParallelism
-        ).mapInPandas(_ident, "id long").count()
-
-        # parquet reader/writer class-loading + codegen (~1s in a fresh
-        # JVM, otherwise charged to the first real scan); 16 rows in /tmp,
-        # removed afterwards — init, not data
-        import shutil
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="spark_prewarm_")
-        try:
-            spark.range(16).write.mode("overwrite").parquet(d + "/t")
-            spark.read.parquet(d + "/t").count()
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
-    except Exception:
-        pass
+        spark.range(16).write.mode("overwrite").parquet(d + "/t")
+        spark.read.parquet(d + "/t").count()
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+    _PROCESS_PREWARMED = True
 
 
 def get_spark(
@@ -110,6 +119,19 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    if master == "local" or master.startswith("local["):
+        # Start Python workers from our daemon: it stops pyspark's per-task
+        # importlib.invalidate_caches() from re-reading pyspark.zip's whole
+        # central directory (~0.1 CPU-s per task on CPython < 3.13; see
+        # worker_daemon).  The daemon imports this package before any task
+        # has added --py-files to sys.path, so the executors' PYTHONPATH
+        # carries the package's import root: the directory, or the
+        # --py-files zip, that holds folkscope_spark.  Local masters only:
+        # on a cluster the driver's path is not valid on the executors, so
+        # they keep Spark's default daemon.
+        b = b.config(
+            "spark.python.daemon.module", "folkscope_spark.worker_daemon"
+        ).config("spark.executorEnv.PYTHONPATH", IMPORT_ROOT)
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
