@@ -8,9 +8,10 @@ worker's first task.
 Why: pyspark's ``worker_util.setup_spark_files`` calls
 ``importlib.invalidate_caches()`` at the start of every task.  On CPython
 3.11/3.12, ``zipimporter.invalidate_caches`` eagerly re-reads the archive's
-whole central directory, and a worker holds about 16 importers over
-``pyspark.zip`` (1,328 entries) — about 0.1 CPU-s per task that no kernel
-change can reach.  CPython 3.13 made the method lazy.
+whole central directory, and a worker holds 16 importers over
+``pyspark.zip`` (1,328 entries), py4j's zip and the spark-core jar — about
+0.1 CPU-s per task that no kernel change can reach.  CPython 3.13 made the
+method lazy.
 
 What: ``install()`` wraps ``zipimport._read_directory`` to record, next to
 each directory it returns, the archive's ``(st_mtime_ns, st_size)`` taken
@@ -41,9 +42,7 @@ def _stamp(path: str) -> tuple[int, int] | None:
 
 
 def install() -> None:
-    """Patch ``zipimport`` in this process; a second call is a no-op."""
-    if zipimport.zipimporter.invalidate_caches.__module__ == __name__:
-        return
+    """Patch ``zipimport`` in this process (once, before any fork)."""
     read_directory = zipimport._read_directory
     original = zipimport.zipimporter.invalidate_caches
 
@@ -61,6 +60,7 @@ def install() -> None:
         last = _READS.get(self.archive)
         if (
             last is not None
+            # 3.13+ importers hold no _files; they take the original path
             and last[1] is getattr(self, "_files", None)
             and _stamp(self.archive) == last[0]
         ):
@@ -73,7 +73,8 @@ def install() -> None:
 
 def main() -> None:
     install()
-    # stamp the importers the imports above created, once, before the fork
+    # stamp what was read before install() (e.g. a --py-files zip holding
+    # this package), once, so the forked workers inherit the stamps
     importlib.invalidate_caches()
     from pyspark import daemon
 

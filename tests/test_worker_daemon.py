@@ -2,6 +2,7 @@
 
 import importlib
 import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -80,12 +81,6 @@ def test_invalidate_caches_rereads_only_a_changed_archive(
     sys.path_importer_cache.pop(archive, None)
 
 
-def test_install_is_idempotent(patched):
-    method = zipimport.zipimporter.invalidate_caches
-    worker_daemon.install()
-    assert zipimport.zipimporter.invalidate_caches is method
-
-
 def test_local_session_workers_run_from_worker_daemon():
     from folkscope_spark.session import IMPORT_ROOT, get_spark
 
@@ -110,3 +105,24 @@ def test_local_session_workers_run_from_worker_daemon():
     assert conf.get("spark.python.daemon.module") == "folkscope_spark.worker_daemon"
     assert conf.get("spark.executorEnv.PYTHONPATH") == IMPORT_ROOT
     assert os.path.isdir(os.path.join(IMPORT_ROOT, "folkscope_spark"))
+
+
+def test_get_spark_fails_loudly_when_workers_cannot_start():
+    """A daemon that cannot start fails the session prewarm, not a later stage."""
+    script = (
+        "from folkscope_spark.session import get_spark\n"
+        "get_spark(app='broken', master='local[1]', shuffle_partitions=1,\n"
+        "          extra={'spark.python.daemon.module': 'folkscope_spark.no_such'})\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=root,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode != 0
+    assert "no_such" in proc.stderr
