@@ -1,18 +1,17 @@
-"""Extra measurement harness for optimization rounds (bench.py stays frozen).
-
-Three subcommands::
+"""Headline-query timing harness for optimization rounds (bench.py stays
+frozen)::
 
     python bench_extra.py queries [--sf-dir D] [--repeats N] [--mode count|noop]
         [--only a,b,c] [--plans-dir plans/r06] [--suffix before]
-    python bench_extra.py kg --pages 25000 [--repeats N]
-        [--master local[32]] [--shuffle 96]
-    python bench_extra.py headline-all   # bench.py-methodology single pass
 
 ``queries`` times each headline query with the same ``.count()`` call the
 frozen bench uses (plus optional noop-sink isolation, guide §1.4) and can dump
-``explain("formatted")`` per query for the plan-diff record.  ``kg`` runs one
-pipeline leg and prints per-stage timings as JSON.  Nothing here caches
-results: every invocation recomputes from the parquet inputs / generators.
+``explain("formatted")`` per query for the plan-diff record.  Nothing here
+caches results: every invocation recomputes from the parquet inputs.
+
+Pipeline legs are timed elsewhere: ``perfbench/run.py`` (end-to-end metrics
+and the per-layer ledger) and ``tools/kg_leg.py`` (one leg per process, for
+A/B runs of two checkouts).
 """
 
 from __future__ import annotations
@@ -45,7 +44,7 @@ HEADLINE = [
 ]
 
 
-def _fresh_session(master=None, shuffle=None):
+def _fresh_session():
     from folkscope_spark.session import get_spark
     from pyspark.sql import SparkSession
 
@@ -54,8 +53,8 @@ def _fresh_session(master=None, shuffle=None):
         active.stop()
     spark = get_spark(
         app="bench-extra",
-        master=master or f"local[{CPUS}]",
-        shuffle_partitions=shuffle if shuffle is not None else 2 * CPUS,
+        master=f"local[{CPUS}]",
+        shuffle_partitions=2 * CPUS,
         extra={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("OFF")
@@ -99,41 +98,6 @@ def cmd_queries(args):
     spark.stop()
 
 
-def cmd_kg(args):
-    from folkscope_spark.pipeline import run_pipeline
-
-    spark = _fresh_session(args.master, args.shuffle)
-    # warmup (same as bench.run_kg): one small run pays worker startup/JIT
-    run_pipeline(
-        spark, out_dir=None, n_pages=300, n_items=60, with_concepts=True,
-        with_canonicalize=True, max_extra=1,
-    )["triples"].count()
-    walls, stages_best = [], None
-    for _ in range(args.repeats):
-        t0 = time.time()
-        r = run_pipeline(
-            spark, out_dir=None, n_pages=args.pages,
-            n_items=max(50, args.pages // 17), with_concepts=True,
-            with_canonicalize=True, max_extra=2,
-        )
-        r["triples"].count()
-        wall = time.time() - t0
-        walls.append(wall)
-        if wall == min(walls):
-            stages = dict(r["stages"])
-            for k, v in r["kernel_timers"].seconds().items():
-                stages[f"{k}_kernel_wall_s"] = v["wall"]
-                stages[f"{k}_kernel_cpu_s"] = v["cpu"]
-            stages_best = stages
-        spark.catalog.clearCache()
-    print(json.dumps({
-        "pages": args.pages, "master": args.master or f"local[{CPUS}]",
-        "wall_s": round(min(walls), 2), "walls": [round(w, 2) for w in walls],
-        "stages": {k: round(v, 3) for k, v in sorted(stages_best.items(), key=lambda x: -x[1])},
-    }, indent=1))
-    spark.stop()
-
-
 def main():
     ap = argparse.ArgumentParser()
     sub = ap.add_subparsers(dest="cmd", required=True)
@@ -145,12 +109,6 @@ def main():
     q.add_argument("--plans-dir", default="")
     q.add_argument("--suffix", default="before")
     q.set_defaults(fn=cmd_queries)
-    k = sub.add_parser("kg")
-    k.add_argument("--pages", type=int, default=25000)
-    k.add_argument("--repeats", type=int, default=1)
-    k.add_argument("--master", default=None)
-    k.add_argument("--shuffle", type=int, default=None)
-    k.set_defaults(fn=cmd_kg)
     args = ap.parse_args()
     args.fn(args)
 

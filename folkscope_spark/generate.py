@@ -4,12 +4,15 @@ Spark-first rewrite of the reference generation entry point
 (``/root/reference/src/generator/generation.py``):
 
 ``pages -> candidate pairs -> join(broadcast items) -> explode(21 templates)
--> left_anti(done_keys) -> mapInPandas(gen_assertions) -> assertions``
+-> left_anti(done_keys) -> mapInPandas(gen_tail) on the key columns
+-> rebuild prompts + explode continuations -> assertions``
 
 The items dimension is broadcast (hot dictionary); the 21-template expansion
 is a broadcast-join with a literal template table (no UDF); the LLM call is a
 deterministic hash-seeded surrogate inside an Arrow-batched ``mapInPandas``
-(interface-compatible with a real model: batched rows in, text out).
+(interface-compatible with a real model: batched rows in, text out).  Only
+the key columns cross into Python; the prompt strings are rebuilt in the JVM
+(:func:`explode_assertions`).
 """
 
 from __future__ import annotations
@@ -22,6 +25,10 @@ from .schemas import GENERATIONS
 from .synthetic import gen_tail
 
 _ASIN_RE = r"/(B\d{9})\+(B\d{9})$"
+
+# continuations per prompt: the reference samples 3 top-p sequences
+# (generation.py:92-113)
+NUM_SEQUENCES = 3
 
 
 def pairs_from_pages(pages: DataFrame) -> DataFrame:
@@ -51,18 +58,31 @@ def template_table(spark) -> DataFrame:
     )
 
 
+def _prompt():
+    """The prompt text (generation.py:170-185) from ``title_a``, ``title_b``
+    and ``prompt_suffix``.  :func:`build_prompts` filters on it and
+    :func:`explode_assertions` rebuilds it, so both use this one
+    expression."""
+    return F.concat(
+        F.lit('He bought a product of "'),
+        F.col("title_a"),
+        F.lit('" and a product of "'),
+        F.col("title_b"),
+        F.lit('" '),
+        F.col("prompt_suffix"),
+    )
+
+
 def build_prompts(
-    pairs: DataFrame,
-    items: DataFrame,
-    templates: DataFrame,
-    target_cate: str | None = None,
+    pairs: DataFrame, items: DataFrame, templates: DataFrame
 ) -> DataFrame:
     """pairs x items x items x 21 relations -> prompt rows.
 
     Broadcast equi-joins replace the reference's dict lookups
     (generation.py:170-185); the combined-title-length filter is P3
-    (generation.py:217-220); ``target_cate`` applies the P4 category filter
-    (generation.py:173); pair_key/md5 key per utils.py:42-49.
+    (generation.py:217-220); pair_key/md5 key per utils.py:42-49.  Every
+    pair is prompted: the P4 category filter (generation.py:173) is
+    :func:`category_filter`, for callers that target one category.
     """
     a = items.select(
         F.col("asin").alias("item_a"),
@@ -81,21 +101,9 @@ def build_prompts(
             F.size(F.split("title_a", " ")) + F.size(F.split("title_b", " ")) <= 50
         )
     )
-    if target_cate is not None:
-        enriched = category_filter(enriched, target_cate)
     return (
         enriched.crossJoin(F.broadcast(templates))
-        .withColumn(
-            "prompt",
-            F.concat(
-                F.lit('He bought a product of "'),
-                F.col("title_a"),
-                F.lit('" and a product of "'),
-                F.col("title_b"),
-                F.lit('" '),
-                F.col("prompt_suffix"),
-            ),
-        )
+        .withColumn("prompt", _prompt())
         .withColumn(
             "pair_key",
             F.concat_ws("-", "item_a", "item_b", "relation"),
@@ -107,11 +115,11 @@ def build_prompts(
     )
 
 
-def category_filter(pairs_enriched: DataFrame, target_cate: str) -> DataFrame:
+def category_filter(pairs_enriched: DataFrame, category: str) -> DataFrame:
     """P4 (generation.py:173): keep a pair when either item's top category
     matches the target.  Expects top_cate_a/top_cate_b columns."""
     return pairs_enriched.filter(
-        (F.col("top_cate_a") == target_cate) | (F.col("top_cate_b") == target_cate)
+        (F.col("top_cate_a") == category) | (F.col("top_cate_b") == category)
     )
 
 
@@ -138,24 +146,14 @@ def resume_filter(prompts: DataFrame, done_keys: DataFrame | None) -> DataFrame:
     return prompts.join(done_keys.select("pair_key"), "pair_key", "left_anti")
 
 
-def generate_assertions(
-    prompts: DataFrame,
-    num_sequences: int = 3,
-    micro_batches: int | None = None,
-    dense_tails: bool = False,
-) -> DataFrame:
-    """Surrogate-LLM expansion: 3 deterministic continuations per prompt
-    (generation.py:92-113 samples 3 top-p sequences; here hash-seeded
-    template filling — same interface, deterministic).
-
-    ``micro_batches`` repartitions before the UDF — the Arrow-batch shaping
-    knob that replaces the reference's GPU batch-size control
-    (generation.py:233-243).  ``dense_tails`` selects the length-diverse
-    surrogate corpus (see :func:`folkscope_spark.synthetic.gen_tail`).
+def generate_assertions(prompts: DataFrame, dense_tails: bool = False) -> DataFrame:
+    """Surrogate-LLM expansion: ``NUM_SEQUENCES`` deterministic continuations
+    per prompt (generation.py:92-113 samples 3 top-p sequences; here
+    hash-seeded template filling — same interface, deterministic).
+    ``dense_tails`` selects the length-diverse surrogate corpus (see
+    :func:`folkscope_spark.synthetic.gen_tail`).  The output carries no
+    ``prompt``: :func:`explode_assertions` rebuilds it.
     """
-    if micro_batches:
-        prompts = prompts.repartition(micro_batches)
-
     # Only the key columns cross the Python boundary (guide §4.1): the
     # surrogate derives continuations from (pair_key, relation, seq), and
     # the ~500-byte prompt strings were crossing Arrow in BOTH directions
@@ -168,7 +166,7 @@ def generate_assertions(
     def gen(batches):
         for pdf in batches:
             outs = [
-                [gen_tail(pk, rel, s, dense=dense_tails) for s in range(num_sequences)]
+                [gen_tail(pk, rel, s, dense=dense_tails) for s in range(NUM_SEQUENCES)]
                 for pk, rel in zip(pdf["pair_key"], pdf["relation"])
             ]
             pdf = pdf.copy()
@@ -182,7 +180,7 @@ def generate_assertions(
 
 
 def explode_assertions(
-    gens: DataFrame, templates: DataFrame, items: DataFrame | None = None
+    gens: DataFrame, templates: DataFrame, items: DataFrame
 ) -> DataFrame:
     """One row per continuation, with the mining-form sentence.
 
@@ -191,47 +189,23 @@ def explode_assertions(
     (generation_parser.py:131-138): locate the anchor inside the assertion and
     keep the rest; ``open`` keeps everything after ``"because "``.
 
-    When ``gens`` carries no ``prompt`` column (the slim generation path),
-    the prompt is rebuilt here in the JVM via broadcast joins on the items
-    dimension + the template table — byte-identical to the string
-    ``build_prompts`` filtered on, since both are the same deterministic
-    concat over the same dimension rows.
+    ``gens`` carries no prompt (see :func:`generate_assertions`); it is
+    rebuilt here in the JVM via broadcast joins on the items dimension + the
+    template table — byte-identical to the string ``build_prompts`` filtered
+    on, since both are :func:`_prompt` over the same dimension rows.
     """
-    if "prompt" not in gens.columns:
-        if items is None:
-            raise ValueError("slim gens need the items dimension to rebuild prompts")
-        a = items.select(
-            F.col("asin").alias("item_a"), F.col("title").alias("title_a")
-        )
-        b = items.select(
-            F.col("asin").alias("item_b"), F.col("title").alias("title_b")
-        )
-        gens = (
-            gens.join(F.broadcast(a), "item_a")
-            .join(F.broadcast(b), "item_b")
-            .join(
-                F.broadcast(templates.select("relation", "prompt_suffix")),
-                "relation",
-            )
-            .withColumn(
-                "prompt",
-                F.concat(
-                    F.lit('He bought a product of "'),
-                    F.col("title_a"),
-                    F.lit('" and a product of "'),
-                    F.col("title_b"),
-                    F.lit('" '),
-                    F.col("prompt_suffix"),
-                ),
-            )
-        )
-    out = (
-        gens.select(
-            "item_a", "item_b", "relation", "pair_key", "prompt",
+    a = items.select(F.col("asin").alias("item_a"), F.col("title").alias("title_a"))
+    b = items.select(F.col("asin").alias("item_b"), F.col("title").alias("title_b"))
+    return (
+        gens.join(F.broadcast(a), "item_a")
+        .join(F.broadcast(b), "item_b")
+        .join(F.broadcast(templates), "relation")
+        .select(
+            "item_a", "item_b", "relation", "pair_key", "anchor",
+            _prompt().alias("prompt"),
             F.posexplode("output").alias("seq_no", "continuation"),
         )
         .withColumn("assertion", F.concat_ws(" ", "prompt", "continuation"))
-        .join(F.broadcast(templates), "relation")
         .withColumn(
             "tail",
             F.when(
@@ -253,4 +227,3 @@ def explode_assertions(
             "item_a", "item_b", "relation", "pair_key", "seq_no", "assertion", "tail"
         )
     )
-    return out

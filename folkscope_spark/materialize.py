@@ -70,18 +70,16 @@ def bucket_count(approx_rows: int, rows_per_bucket: int = 2_000_000, cap: int = 
 
 
 def write_triples(
-    triples: DataFrame, path: str, n_buckets: int | None = None,
-    approx_rows: int | None = None,
+    triples: DataFrame, path: str, approx_rows: int | None = None
 ) -> None:
     """Partition layout per north_rule: pred dirs x subj-hash buckets.
-    Writes are idempotent per partition (INSERT OVERWRITE semantics).
-    ``n_buckets`` defaults to :func:`bucket_count` of ``approx_rows`` (pass a
-    cheap upstream estimate, e.g. corpus pages), else ``N_BUCKETS``."""
-    if n_buckets is None:
-        n_buckets = bucket_count(approx_rows) if approx_rows else N_BUCKETS
+    Writes are idempotent per partition (INSERT OVERWRITE semantics).  The
+    bucket count is :func:`bucket_count` of ``approx_rows`` (pass a cheap
+    upstream estimate, e.g. corpus pages), else ``N_BUCKETS``."""
+    buckets = bucket_count(approx_rows) if approx_rows else N_BUCKETS
     (
         triples.withColumn(
-            "subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(n_buckets)).cast("int")
+            "subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(buckets)).cast("int")
         )
         .repartition("pred", "subj_bucket")
         .write.mode("overwrite")

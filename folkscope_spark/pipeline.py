@@ -49,11 +49,9 @@ def run_pipeline(
     n_pages: int = 2000,
     n_items: int = 200,
     pages: DataFrame | None = None,
-    min_plausibility: float = 0.0,
     with_concepts: bool = True,
     with_canonicalize: bool = True,
     max_extra: int = 2,
-    micro_batches: int | None = None,
     dedupe_parse: bool = True,
     with_concept_text: bool = False,
     skip_words=None,
@@ -67,7 +65,10 @@ def run_pipeline(
     """Returns {"triples": DataFrame, "stages": {stage: seconds}, ...}.
 
     ``out_dir=None`` runs storeless: stage outputs are cached in memory
-    instead of snapshot-committed (fast smoke/test mode, no resume).
+    instead of snapshot-committed (fast smoke/test mode, no resume).  A
+    storeless stage only builds its plan, so its ``stages`` entry times plan
+    construction; the work lands in whichever timed step runs the first
+    action on it (see ``_MemStore``).
 
     ``dedupe_parse`` selects nothing: every run parses, mines and matches
     each distinct (relation, tail) once and re-attaches the per-row subjects
@@ -88,7 +89,7 @@ def run_pipeline(
     # into in-kernel compute (summed across cores, wall + process_time) vs
     # framework (Arrow/shuffle/schedule) overhead
     kernel_timers = KernelTimers(spark)
-    fp = (f"v1:n_pages={n_pages}:n_items={n_items}:minp={min_plausibility}"
+    fp = (f"v1:n_pages={n_pages}:n_items={n_items}"
           f":extra={max_extra}:dense={dense_tails}"
           f":skip={','.join(sorted(skip_words)) if skip_words else ''}"
           f":sidx={start_index_mode}")
@@ -100,35 +101,31 @@ def run_pipeline(
         return out
 
     class _MemStore:
-        """Storeless stand-in.  Three materialization classes, chosen to
-        minimize fixed per-job barriers (the non-scaling O of the fitted
-        t = C/n + O cost model — VERDICT r2 #4):
+        """Storeless stand-in.  Two materialization classes, and neither runs
+        a job of its own (every eager action is one more fixed-cost job
+        chain, the non-scaling O of the fitted t = C/n + O cost model —
+        VERDICT r2 #4):
 
-        * lazy — single consumer; Spark fuses the stage into its consumer's
-          job (e.g. generate+score pipeline into parse's job);
-        * cache-lazy — multi-consumer but cheap: ``cache()`` WITHOUT an eager
-          count.  The first consumer's job materializes the cache (no extra
-          barrier); later consumers hit it.  Every eager count removed is one
-          fewer fixed-cost job chain at any core count;
-        * eager — the two expensive Python kernels (parsed, matched) keep
-          cache+count so the bench's per-stage timings attribute their cost
-          to the right stage."""
+        * lazy (``_LAZY``) — one consumer; Spark fuses the stage into its
+          consumer's job (e.g. generation runs inside the job that fills
+          scored);
+        * cached — every other stage: ``cache()`` and no action.  The first
+          consumer's job fills the cache (the ``sent_counts`` collect for
+          parsed, canonicalize's first action for matched); later consumers
+          read it.
 
-        # eventualities is cache-lazy, not lazy: the relational-Probase
+        So ``stages`` times plan construction for these stages; per-layer
+        cost is in Spark's status store (per-job time) and the kernel
+        timers."""
+
+        # eventualities is cached, not lazy: the relational-Probase
         # conceptualize plan reads it twice (events x its own mini-map
         # join), and a lazy stand-in would recompute the merge agg per read
         _LAZY = {"assertions", "pattern_counts", "canon_map"}
-        _CACHE_LAZY = {"scored", "event_triples_src", "triples", "concept_rows",
-                       "concept_text", "eventualities"}
 
         def stage(self, _spark, name, _fp, build, **kw):
             df = build()
-            if name in self._LAZY:
-                return df
-            df = df.cache()
-            if name not in self._CACHE_LAZY:
-                df.count()
-            return df
+            return df if name in self._LAZY else df.cache()
 
         def data_path(self, name):
             return "/tmp/folkscope_mem_" + name
@@ -168,9 +165,7 @@ def run_pipeline(
         ):
             prev = spark.read.parquet(m["path"])
         if prev is None:
-            gens = generate.generate_assertions(
-                prompts, micro_batches=micro_batches, dense_tails=dense_tails
-            )
+            gens = generate.generate_assertions(prompts, dense_tails=dense_tails)
             return generate.explode_assertions(gens, templates, items)
         # keep only reusable rows still requested by this run, anti-join the
         # rest; the counters prove zero prompts were regenerated
@@ -184,9 +179,7 @@ def run_pipeline(
             todo.select("pair_key").distinct().count()
         )
         fresh = generate.explode_assertions(
-            generate.generate_assertions(
-                todo, micro_batches=micro_batches, dense_tails=dense_tails
-            ),
+            generate.generate_assertions(todo, dense_tails=dense_tails),
             templates,
             items,
         )
@@ -214,8 +207,6 @@ def run_pipeline(
             ),
         ),
     )
-    if min_plausibility > 0:
-        scored = score.threshold(scored, min_plausibility)
 
     # -- parsing -------------------------------------------------------------
     parsed = timed(
@@ -237,27 +228,32 @@ def run_pipeline(
             lambda: patterns.count_anchored_patterns(parsed, max_extra=max_extra),
         ),
     )
-    sent_counts = {
-        r["relation"]: int(r["n"])
-        for r in parsed.groupBy("relation").agg(F.sum("weight").alias("n")).collect()
-    }
-    schedules = None
-    if adaptive_mining:
-        # the reference's CDF-driven per-size frequency schedule
-        # (pattern_filter.py:119-153): one tiny distributed groupBy feeds a
-        # driver-side walk; the resulting bands cut executor-side
-        lens = patterns.anchor_lens()
-        cdf = patterns.length_cdf(parsed)
-        schedules = {
-            rel: patterns.adaptive_schedule(cnts, lens.get(rel, 0))
-            for rel, cnts in cdf.items()
+
+    def finish_mining():
+        # the first actions on parsed: storeless, the first of them fills
+        # parsed's cache, so this step carries the parse kernel's cost
+        schedules = None
+        if adaptive_mining:
+            # the reference's CDF-driven per-size frequency schedule
+            # (pattern_filter.py:119-153): one tiny distributed groupBy feeds
+            # a driver-side walk; the resulting bands cut executor-side
+            lens = patterns.anchor_lens()
+            cdf = patterns.length_cdf(parsed)
+            schedules = {
+                rel: patterns.adaptive_schedule(cnts, lens.get(rel, 0))
+                for rel, cnts in cdf.items()
+            }
+        sent_counts = {
+            r["relation"]: int(r["n"])
+            for r in parsed.groupBy("relation")
+            .agg(F.sum("weight").alias("n"))
+            .collect()
         }
-    mined = timed(
-        "mine_finish",
-        lambda: patterns.finish_patterns(
+        return patterns.finish_patterns(
             pattern_counts, sent_counts, schedules=schedules
-        ),
-    )
+        )
+
+    mined = timed("mine_finish", finish_mining)
     # template-less `open` relation matches against the merged cross-relation
     # pattern set (scripts/run_match.sh:13-16; pattern_merge semantics)
     if mined:
