@@ -364,6 +364,47 @@ def test_pipeline_concept_text_pass(spark):
     assert n_ct >= n_parsed > 0
 
 
+@pytest.mark.parametrize("probase_mode", ["auto", "relational"])
+def test_concept_text_matches_python_kernel(spark, probase_mode):
+    """The Spark ``concept_text`` rows equal ``conceptualize_from_text`` run in
+    plain Python over the collected ``parsed`` rows, under both Probase
+    deliveries (broadcast dict and the relational ``topk_table`` mini-map)."""
+    from collections import Counter
+
+    from folkscope_spark import synthetic
+    from folkscope_spark.conceptualize import (
+        cid_of,
+        collect_topk_map,
+        conceptualize_from_text,
+        probase_topk,
+        template_start_index,
+    )
+    from folkscope_spark.pipeline import run_pipeline
+
+    r = run_pipeline(
+        spark, out_dir=None, n_pages=120, n_items=40, max_extra=1,
+        with_concepts=True, with_canonicalize=False, with_concept_text=True,
+        probase_mode=probase_mode,
+    )
+    assert r["probase_mode"] == ("broadcast" if probase_mode == "auto" else "relational")
+    topk_map = collect_topk_map(probase_topk(synthetic.probase_df(spark)))
+    want = Counter()
+    for p in r["parsed"].collect():
+        deps = [(d["gov"], d["rel"], d["dep"]) for d in p["dependencies"]]
+        for cw, score in conceptualize_from_text(
+            list(p["lemmas"]), list(p["ners"]), list(p["pos_tags"]), deps,
+            topk_map, start_index=template_start_index(p["relation"]),
+        ):
+            want[(p["sid"], p["relation"], cid_of(cw), " ".join(cw), float(score))] += 1
+    got = Counter(
+        tuple(x)
+        for x in r["concept_text"]
+        .select("sid", "relation", "cid", "concept_text", "score")
+        .collect()
+    )
+    assert want and got == want
+
+
 def test_adaptive_schedule_e2e_dense_corpus(spark):
     """VERDICT r2 missing #2: the CDF-driven adaptive mining schedule run
     end-to-end on a length-diverse corpus (dense_tails), asserting the banded
