@@ -924,7 +924,7 @@ def q_fs_conceptualize(spark, sf):  # Probase conceptualization kernel (J3/T4/F1
 
     ev_schema = (
         "eid string, relation string, words array<string>, "
-        "pos_tags array<string>, ners array<string>, "
+        "pos_tags array<string>, ner_counters array<map<string,double>>, "
         "dependencies array<struct<gov:int,rel:string,dep:int>>, "
         "pattern_sig string, frequency double"
     )
@@ -944,7 +944,9 @@ def q_fs_conceptualize(spark, sf):  # Probase conceptualization kernel (J3/T4/F1
                         "relation": "capableOf",
                         "words": [w.lower() for w in p["lemmas"]],
                         "pos_tags": p["pos_tags"],
-                        "ners": p["ners"],
+                        # one sentence per eventuality: each position's
+                        # merged NER counter holds its one label
+                        "ner_counters": [{n: 1.0} for n in p["ners"]],
                         "dependencies": [
                             {"gov": g, "rel": r, "dep": dp}
                             for g, r, dp in p["dependencies"]
@@ -956,7 +958,7 @@ def q_fs_conceptualize(spark, sf):  # Probase conceptualization kernel (J3/T4/F1
             yield pd.DataFrame(
                 rows,
                 columns=[
-                    "eid", "relation", "words", "pos_tags", "ners",
+                    "eid", "relation", "words", "pos_tags", "ner_counters",
                     "dependencies", "pattern_sig", "frequency",
                 ],
             )
@@ -995,7 +997,7 @@ def q_fs_concept_text(spark, sf):  # whole-sentence conceptualized_text pass
     d = _t(spark, sf, "documents")
 
     parsed_schema = (
-        "sid string, relation string, tokens array<string>, "
+        "sid string, relation string, lemmas array<string>, "
         "pos_tags array<string>, ners array<string>, "
         "dependencies array<struct<gov:int,rel:string,dep:int>>"
     )
@@ -1012,7 +1014,7 @@ def q_fs_concept_text(spark, sf):  # whole-sentence conceptualized_text pass
                     {
                         "sid": str(doc_id),
                         "relation": "capableOf",
-                        "tokens": [w.lower() for w in p["lemmas"]],
+                        "lemmas": [w.lower() for w in p["lemmas"]],
                         "pos_tags": p["pos_tags"],
                         "ners": p["ners"],
                         "dependencies": [
@@ -1024,7 +1026,7 @@ def q_fs_concept_text(spark, sf):  # whole-sentence conceptualized_text pass
             yield pd.DataFrame(
                 rows,
                 columns=[
-                    "sid", "relation", "tokens", "pos_tags", "ners", "dependencies",
+                    "sid", "relation", "lemmas", "pos_tags", "ners", "dependencies",
                 ],
             )
 

@@ -5,12 +5,16 @@ Spark-first rewrite of ``/root/reference/src/pattern/conceptualizer.py``:
 * the instance->concept likelihood table is computed **relationally** —
   ``likelihood = freq / sum(freq) over (partition by instance)``
   (``conceptualizer.py:76-79``) with per-instance top-K dedupe by hyphenated
-  concept name (``:506-524``) — then collected (it is a dimension) and shipped
-  to executors in the UDF closure;
+  concept name (``:506-524``) — then either collected and ``sc.broadcast``
+  (a small Probase) or equi-joined into a bounded per-row mini-map
+  (:func:`concept_minimaps`, any size);
 * the bounded combination search over noun-slot substitutions
   (``:526-566``: subsets of matched nouns x top-K concepts each, score =
-  product of likelihoods, heap capped at ``topK**topK``) runs per-eventuality
-  inside a ``mapInPandas`` batch — a per-row algorithm, not a relational op;
+  product of likelihoods, heap capped at ``topK**topK``) runs per row inside
+  a ``mapInPandas`` batch — a per-row algorithm, not a relational op.  Both
+  passes, per merged eventuality (:func:`conceptualize`) and per parsed line
+  (:func:`conceptualize_text`, ``:682-685``), run through one Spark driver
+  (:func:`_concept_pass`) and one two-pass search (:func:`_two_pass`);
 * seed-rule NER rewrite (``SeedRuleConceptualizer.conceptualize_from_text``,
   ``:255-278``): words whose NER is in the reference's ``selected_ners`` set
   become ``__TYPE__k`` placeholders (k indexed per (type, word), reused for
@@ -37,7 +41,8 @@ Spark-first rewrite of ``/root/reference/src/pattern/conceptualizer.py``:
   conceptualized as phrases and merged with the word-level list by descending
   score (two-pointer, surface-dedup, capped at ``topK**topK``).  The
   *eventuality* path feeds word-level ``pos_tags`` to the phrase pass
-  (``:342,351``) — we reproduce that; spans follow the text path's correct
+  (``:342,351``) and the text path each segment's first-word tag
+  (``:392-492``) — we reproduce both; spans follow the text path's correct
   ``words[min:max+1]`` (``:428``) rather than ``Eventuality.phrases``'s
   misread of its (start, end) pairs (``object.py:602-607`` vs ``:288-291``) —
   a reference bug we document and do not copy (SURVEY.md §3.4 policy);
@@ -49,7 +54,7 @@ from __future__ import annotations
 
 import hashlib
 import heapq
-from itertools import combinations
+from itertools import combinations, repeat
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
@@ -137,18 +142,22 @@ def concept_minimaps(
     )
 
 
-def _row_topk(entries) -> dict[str, list[tuple[str, float]]]:
-    """Rebuild the per-row instance->top-K dict from a ``_concept_map`` array
-    (same value order as :func:`collect_topk_map`: likelihood desc, concept
-    asc — ``probase_concepts`` truncates to ``top_k`` positionally)."""
-    tm: dict[str, list[tuple[str, float]]] = {}
-    if entries is None:
-        return tm
+def _topk_dict(entries) -> dict[str, list[tuple[str, float]]]:
+    """instance -> [(concept, likelihood)] from (instance, concept,
+    likelihood) records, each list ordered likelihood desc, concept asc —
+    ``probase_concepts`` truncates to ``top_k`` positionally."""
+    out: dict[str, list[tuple[str, float]]] = {}
     for e in entries:
-        tm.setdefault(e["instance"], []).append((e["concept"], float(e["likelihood"])))
-    for v in tm.values():
+        out.setdefault(e["instance"], []).append((e["concept"], float(e["likelihood"])))
+    for v in out.values():
         v.sort(key=lambda x: (-x[1], x[0]))
-    return tm
+    return out
+
+
+def _row_topk(entries) -> dict[str, list[tuple[str, float]]]:
+    """The per-row instance->top-K dict from a ``_concept_map`` array (same
+    value order as :func:`collect_topk_map`)."""
+    return _topk_dict(entries if entries is not None else ())
 
 
 def max_instance_tokens(probase: DataFrame) -> int:
@@ -164,12 +173,7 @@ def collect_topk_map(topk: DataFrame) -> dict[str, list[tuple[str, float]]]:
     the dimension, which is why larger ones take :func:`concept_minimaps`.
     Ship the result with ``sc.broadcast`` (once per executor), not in a task
     closure."""
-    out: dict[str, list[tuple[str, float]]] = {}
-    for r in topk.collect():
-        out.setdefault(r["instance"], []).append((r["concept"], float(r["likelihood"])))
-    for v in out.values():
-        v.sort(key=lambda x: (-x[1], x[0]))
-    return out
+    return _topk_dict(topk.collect())
 
 
 def _resolve_topk(topk_map) -> dict[str, list[tuple[str, float]]]:
@@ -361,6 +365,59 @@ def merge_concept_lists(
     return out
 
 
+def _two_pass(
+    words: list[str],
+    pos_tags: list[str],
+    ners,
+    dependencies,
+    topk_map: dict[str, list[tuple[str, float]]],
+    top_k: int,
+    start_index: int,
+    segment_pos: bool,
+) -> list[tuple[list[str], float]]:
+    """The reference's two-pass search (conceptualizer.py:305-390 and
+    :392-492): word-level seed rule + Probase with the template prefix
+    masked; when compound segments exist, a phrase-level pass (phrase NER =
+    its first word's label) merged two-pointer with the word level; the
+    seed-rule fallback when both are empty.
+
+    ``segment_pos`` picks the phrase pass's POS gate: False gates phrase i by
+    the word-level ``pos_tags[i]``, as the eventuality path does
+    (conceptualizer.py:342,351); True gates it by the segment's own
+    first-word tag, as the text path does."""
+    from .eventuality import dep_compound_segment
+
+    seeded = seed_rule_masked(words, ners, start_index)
+    concept_strs = probase_concepts(
+        seeded, _mask_pos(pos_tags, start_index), topk_map, top_k
+    )
+
+    segments = (
+        dep_compound_segment([tuple(d) for d in dependencies], len(words))
+        if dependencies
+        else [(i,) for i in range(len(words))]
+    )
+    if len(segments) != len(words):
+        # start_index remapped to the segment that contains it (:334-337)
+        si2 = next(
+            (i for i, s in enumerate(segments) if start_index in s), start_index
+        )
+        phrases = [" ".join(words[min(s): max(s) + 1]) for s in segments]
+        phrase_ners = [ners[s[0]] for s in segments] if ners is not None else None
+        phrase_pos = [pos_tags[s[0]] for s in segments] if segment_pos else pos_tags
+        seeded2 = seed_rule_masked(phrases, phrase_ners, si2)
+        strs2 = probase_concepts(
+            seeded2, _mask_pos(phrase_pos, si2), topk_map, top_k
+        )
+        concept_strs = merge_concept_lists(concept_strs, strs2, top_k)
+
+    if not concept_strs:
+        # seed-rule fallback (conceptualizer.py:384-387; the reference's
+        # list != str guard is always True -> unconditional on empty)
+        concept_strs = [(list(seeded), 1.0)]
+    return concept_strs
+
+
 def conceptualize_eventuality(
     words: list[str],
     pos_tags: list[str],
@@ -370,48 +427,17 @@ def conceptualize_eventuality(
     top_k: int = DEFAULT_TOPK,
     start_index: int = 0,
 ) -> list[tuple[list[str], float]]:
-    """Full eventuality-path conceptualization (conceptualizer.py:305-390):
-    word-level seed rule + Probase (template prefix masked), phrase-level
-    second pass when compound segments exist (word-level pos_tags fed to the
-    phrase pass, per the reference), two-pointer merge, seed-rule fallback.
+    """Eventuality-path conceptualization (conceptualizer.py:305-390); the
+    phrase pass is gated by the word-level ``pos_tags`` (see
+    :func:`_two_pass`).
 
     ``ners`` must already be per-position string labels (the eventuality path
     reduces merged Counters via ``Eventuality.ners``/``_get_ner``,
-    object.py:190-194,496-506 — dominant non-O label, "O" forced on VB*)."""
-    from .eventuality import dep_compound_segment
-
-    seeded = seed_rule_masked(words, ners, start_index)
-    strs1 = probase_concepts(seeded, _mask_pos(pos_tags, start_index), topk_map, top_k)
-    concept_strs = strs1
-
-    segments = (
-        dep_compound_segment([tuple(d) for d in dependencies], len(words))
-        if dependencies
-        else [(i,) for i in range(len(words))]
+    object.py:190-194,496-506 — see :func:`_dominant_ner`)."""
+    return _two_pass(
+        words, pos_tags, ners, dependencies, topk_map, top_k, start_index,
+        segment_pos=False,
     )
-    if len(segments) != len(words):
-        # phrase-level pass (conceptualizer.py:332-353); start_index remapped
-        # to the segment that contains it (:334-337)
-        si2 = start_index
-        for idx, seg in enumerate(segments):
-            if start_index in seg:
-                si2 = idx
-                break
-        phrases = [" ".join(words[min(s): max(s) + 1]) for s in segments]
-        phrase_ners = (
-            [ners[s[0]] for s in segments] if ners is not None else None
-        )
-        seeded2 = seed_rule_masked(phrases, phrase_ners, si2)
-        # NB: the eventuality path passes word-level pos_tags here
-        # (conceptualizer.py:342,351) — phrase i is gated by pos_tags[i]
-        strs2 = probase_concepts(seeded2, _mask_pos(pos_tags, si2), topk_map, top_k)
-        concept_strs = merge_concept_lists(strs1, strs2, top_k)
-
-    if not concept_strs:
-        # seed-rule fallback (conceptualizer.py:384-387; the reference's
-        # list != str guard is always True -> unconditional on empty)
-        concept_strs = [(list(seeded), 1.0)]
-    return concept_strs
 
 
 def conceptualize_from_text(
@@ -425,44 +451,13 @@ def conceptualize_from_text(
 ) -> list[tuple[list[str], float]]:
     """Whole-sentence text-path conceptualization
     (``ProbaseConceptualizer.conceptualize_from_text``,
-    conceptualizer.py:392-492): like the eventuality path but phrases carry
-    their own POS (first word of the segment) and NER (first word's label,
-    Counter reduced via most_common non-O)."""
-    from .eventuality import dep_compound_segment
-
-    seeded = seed_rule_masked(tokens, ners, start_index)
-    strs1 = probase_concepts(seeded, _mask_pos(pos_tags, start_index), topk_map, top_k)
-    concept_strs = strs1
-
-    segments = (
-        dep_compound_segment([tuple(d) for d in dependencies], len(tokens))
-        if dependencies
-        else [(i,) for i in range(len(tokens))]
+    conceptualizer.py:392-492): like the eventuality path, but each phrase is
+    gated by its segment's first-word POS tag.  ``ners`` are per-position
+    string labels."""
+    return _two_pass(
+        tokens, pos_tags, ners, dependencies, topk_map, top_k, start_index,
+        segment_pos=True,
     )
-    if len(segments) != len(tokens):
-        phrase_words, phrase_ners, phrase_pos = [], [], []
-        si2 = start_index
-        for seg in segments:
-            if start_index in seg:
-                si2 = len(phrase_words)
-            phrase_words.append(" ".join(tokens[min(seg): max(seg) + 1]))
-            n = ners[seg[0]] if ners is not None else "O"
-            if not isinstance(n, str):
-                lbl = "O"
-                for x, _ in sorted(n.items(), key=lambda kv: (-kv[1], kv[0])):
-                    if x != "O":
-                        lbl = x
-                        break
-                n = lbl
-            phrase_ners.append(n)
-            phrase_pos.append(pos_tags[seg[0]])
-        seeded2 = seed_rule_masked(phrase_words, phrase_ners, si2)
-        strs2 = probase_concepts(seeded2, _mask_pos(phrase_pos, si2), topk_map, top_k)
-        concept_strs = merge_concept_lists(strs1, strs2, top_k)
-
-    if not concept_strs:
-        concept_strs = [(list(seeded), 1.0)]
-    return concept_strs
 
 
 def _dominant_ner(counters, pos_tags) -> list | None:
@@ -485,17 +480,53 @@ def _dominant_ner(counters, pos_tags) -> list | None:
     return out
 
 
-def conceptualize(
-    events: DataFrame,
-    topk_map: dict[str, list[tuple[str, float]]] | None,
-    top_k: int = DEFAULT_TOPK,
-    start_index_mode: str = "tokens",
-    topk_table: DataFrame | None = None,
-    max_gram_len: int = 4,
-    kernel_acc=None,
+def _dep_triples(deps):
+    return [(d["gov"], d["rel"], d["dep"]) for d in deps]
+
+
+def _event_rows(row, tm, start_index):
+    """One merged eventuality -> its concept-instance rows."""
+    eid, rel, words, pos_tags, counters, deps, pattern, freq = row
+    pos_tags = list(pos_tags)
+    out = []
+    for cw, score in conceptualize_eventuality(
+        list(words), pos_tags, _dominant_ner(counters, pos_tags),
+        _dep_triples(deps), tm, start_index=start_index,
+    ):
+        cid = cid_of(cw)
+        out.append((
+            pid_of(cid, eid), cid, eid, rel, " ".join(cw), pattern,
+            float(score), float(freq),
+        ))
+    return out
+
+
+def _text_rows(row, tm, start_index):
+    """One parsed line -> its conceptualized_text rows."""
+    sid, rel, lemmas, pos_tags, ners, deps = row
+    return [
+        (sid, rel, cid_of(cw), " ".join(cw), float(score))
+        for cw, score in conceptualize_from_text(
+            list(lemmas), list(ners), list(pos_tags), _dep_triples(deps), tm,
+            start_index=start_index,
+        )
+    ]
+
+
+def _concept_pass(
+    src: DataFrame,
+    in_cols: list[str],
+    row_fn,
+    out_schema: str,
+    topk_map,
+    topk_table: DataFrame | None,
+    max_gram_len: int,
+    start_index_mode: str,
+    kernel_acc,
 ) -> DataFrame:
-    """eventualities (merged D8) -> concept-instance rows
-    (pid, cid, eid, relation, concept_text, pattern, score, frequency).
+    """The one Spark driver behind both passes.  ``in_cols`` starts with the
+    row key and ``relation`` followed by the words column; ``row_fn(row, tm,
+    start_index)`` maps one input row to its output tuples.
 
     Two dimension-delivery modes, same results:
 
@@ -506,104 +537,69 @@ def conceptualize(
       (equi-join + collect_list, zero driver collect — the 100 TB path).
       ``max_gram_len`` must be >= :func:`max_instance_tokens`.
 
-    ``start_index_mode`` controls template-prefix masking (see
-    :func:`template_start_index`); the per-relation index is resolved once on
-    the driver and shipped in the closure."""
-
-    schema = (
-        "pid string, cid string, eid string, relation string, "
-        "concept_text string, pattern string, score double, frequency double"
-    )
+    The per-relation template ``start_index`` (see
+    :func:`template_start_index`) is resolved once on the driver and shipped
+    in the closure."""
     start_indices = {
         rel: template_start_index(rel, start_index_mode) for rel in POS_TEMPLATES
     }
-
+    out_cols = [f.split()[0] for f in out_schema.split(", ")]
     relational = topk_table is not None
+    src = src.select(in_cols)
+    if relational:
+        keys = in_cols[:2]
+        src = src.join(
+            concept_minimaps(
+                src, topk_table, key_cols=tuple(keys), words_col=in_cols[2],
+                max_len=max_gram_len,
+            ),
+            keys,
+            "left",
+        )
 
     def run(batches):
-        tm_global = None if relational else _resolve_topk(topk_map)
+        tm = None if relational else _resolve_topk(topk_map)
         for pdf in batches:
             with batch_timer(kernel_acc):
                 rows = []
-                map_src = pdf["_concept_map"] if "_concept_map" in pdf.columns else None
-                has_counters = "ner_counters" in pdf.columns
-                ner_src = pdf["ner_counters"] if has_counters else pdf.get("ners", [None] * len(pdf))
-                dep_src = pdf["dependencies"] if "dependencies" in pdf.columns else [None] * len(pdf)
-                pat_src = pdf["pattern_sig"] if "pattern_sig" in pdf.columns else [None] * len(pdf)
-                if map_src is None:
-                    map_src = [None] * len(pdf)
-                for eid, rel, words, pos_tags, ners, deps, pat, freq, mentries in zip(
-                    pdf["eid"], pdf["relation"], pdf["words"], pdf["pos_tags"],
-                    ner_src, dep_src, pat_src, pdf["frequency"], map_src,
-                ):
-                    tm = tm_global if tm_global is not None else _row_topk(mentries)
-                    words = list(words)
-                    pos_tags = list(pos_tags)
-                    if has_counters:
-                        ners = _dominant_ner(ners, pos_tags)
-                    elif ners is not None:
-                        # Eventuality.ners applies the VB guard to string labels
-                        # too (object.py:496-506)
-                        ners = [
-                            "O" if pos_tags[i].startswith("VB") else n
-                            for i, n in enumerate(list(ners)[: len(pos_tags)])
-                        ]
-                    dep_triples = (
-                        [(d["gov"], d["rel"], d["dep"]) for d in deps]
-                        if deps is not None
-                        else None
-                    )
-                    for cw, score in conceptualize_eventuality(
-                        words, pos_tags, ners, dep_triples, tm, top_k,
-                        start_index=start_indices.get(rel, 0),
-                    ):
-                        cid = cid_of(cw)
-                        rows.append(
-                            {
-                                "pid": pid_of(cid, eid),
-                                "cid": cid,
-                                "eid": eid,
-                                "relation": rel,
-                                "concept_text": " ".join(cw),
-                                "pattern": pat,
-                                "score": float(score),
-                                "frequency": float(freq),
-                            }
-                        )
-                out = pd.DataFrame(
-                    rows,
-                    columns=[
-                        "pid", "cid", "eid", "relation", "concept_text",
-                        "pattern", "score", "frequency",
-                    ],
-                )
+                maps = pdf["_concept_map"] if relational else repeat(None)
+                for row, entries in zip(zip(*(pdf[c] for c in in_cols)), maps):
+                    rows.extend(row_fn(
+                        row, tm if tm is not None else _row_topk(entries),
+                        start_indices.get(row[1], 0),
+                    ))
+                out = pd.DataFrame(rows, columns=out_cols)
             yield out
 
-    cols = [
-        c
-        for c in (
-            "eid", "relation", "words", "pos_tags", "ner_counters", "ners",
-            "dependencies", "pattern_sig", "frequency",
-        )
-        if c in events.columns
-    ]
-    src = events.select(cols)
-    if topk_table is not None:
-        src = src.join(
-            concept_minimaps(
-                src, topk_table, key_cols=("eid", "relation"),
-                words_col="words", max_len=max_gram_len,
-            ),
-            ["eid", "relation"],
-            "left",
-        )
-    return src.mapInPandas(run, schema=schema)
+    return src.mapInPandas(run, schema=out_schema)
+
+
+def conceptualize(
+    events: DataFrame,
+    topk_map: dict[str, list[tuple[str, float]]] | None,
+    start_index_mode: str = "tokens",
+    topk_table: DataFrame | None = None,
+    max_gram_len: int = 4,
+    kernel_acc=None,
+) -> DataFrame:
+    """Merged eventualities (:func:`folkscope_spark.match.merge_eventualities`)
+    -> concept-instance rows
+    (pid, cid, eid, relation, concept_text, pattern, score, frequency).
+    Probase delivery and prefix masking as in :func:`_concept_pass`."""
+    return _concept_pass(
+        events,
+        ["eid", "relation", "words", "pos_tags", "ner_counters", "dependencies",
+         "pattern_sig", "frequency"],
+        _event_rows,
+        "pid string, cid string, eid string, relation string, "
+        "concept_text string, pattern string, score double, frequency double",
+        topk_map, topk_table, max_gram_len, start_index_mode, kernel_acc,
+    )
 
 
 def conceptualize_text(
     parsed: DataFrame,
     topk_map: dict[str, list[tuple[str, float]]] | None,
-    top_k: int = DEFAULT_TOPK,
     start_index_mode: str = "tokens",
     topk_table: DataFrame | None = None,
     max_gram_len: int = 4,
@@ -611,68 +607,17 @@ def conceptualize_text(
 ) -> DataFrame:
     """``conceptualized_text`` — the whole-parsed-line pass the reference runs
     alongside per-eventuality conceptualization (conceptualizer.py:682-685):
-    every parsed sentence, not just its eventualities, gets concept rows.
-
-    Same two dimension-delivery modes as :func:`conceptualize`: a collected
-    ``topk_map`` or the fully relational ``topk_table`` mini-map join."""
-    schema = "sid string, relation string, cid string, concept_text string, score double"
-    start_indices = {
-        rel: template_start_index(rel, start_index_mode) for rel in POS_TEMPLATES
-    }
-    has_tokens = "tokens" in parsed.columns
-
-    relational = topk_table is not None
-
-    def run(batches):
-        tm_global = None if relational else _resolve_topk(topk_map)
-        for pdf in batches:
-            with batch_timer(kernel_acc):
-                rows = []
-                tok_src = pdf["tokens"] if has_tokens else pdf["lemmas"]
-                ner_src = pdf["ners"] if "ners" in pdf.columns else [None] * len(pdf)
-                map_src = (
-                    pdf["_concept_map"]
-                    if "_concept_map" in pdf.columns
-                    else [None] * len(pdf)
-                )
-                for sid, rel, toks, pos_tags, ners, deps, mentries in zip(
-                    pdf["sid"], pdf["relation"], tok_src, pdf["pos_tags"],
-                    ner_src, pdf["dependencies"], map_src,
-                ):
-                    tm = tm_global if tm_global is not None else _row_topk(mentries)
-                    dep_triples = [(d["gov"], d["rel"], d["dep"]) for d in deps]
-                    for cw, score in conceptualize_from_text(
-                        list(toks), list(ners) if ners is not None else None,
-                        list(pos_tags), dep_triples, tm, top_k,
-                        start_index=start_indices.get(rel, 0),
-                    ):
-                        rows.append(
-                            {
-                                "sid": sid,
-                                "relation": rel,
-                                "cid": cid_of(cw),
-                                "concept_text": " ".join(cw),
-                                "score": float(score),
-                            }
-                        )
-                out = pd.DataFrame(
-                    rows, columns=["sid", "relation", "cid", "concept_text", "score"]
-                )
-            yield out
-
-    cols = [c for c in ("sid", "relation", "tokens", "lemmas", "pos_tags", "ners", "dependencies") if c in parsed.columns]
-    src = parsed.select(cols)
-    if topk_table is not None:
-        src = src.join(
-            concept_minimaps(
-                src, topk_table, key_cols=("sid", "relation"),
-                words_col="tokens" if has_tokens else "lemmas",
-                max_len=max_gram_len,
-            ),
-            ["sid", "relation"],
-            "left",
-        )
-    return src.mapInPandas(run, schema=schema)
+    every parsed sentence (:func:`folkscope_spark.parse.parse_assertions`
+    rows), not just its eventualities, gets (sid, relation, cid,
+    concept_text, score) rows.  Probase delivery and prefix masking as in
+    :func:`_concept_pass`."""
+    return _concept_pass(
+        parsed,
+        ["sid", "relation", "lemmas", "pos_tags", "ners", "dependencies"],
+        _text_rows,
+        "sid string, relation string, cid string, concept_text string, score double",
+        topk_map, topk_table, max_gram_len, start_index_mode, kernel_acc,
+    )
 
 
 def top_instances_per_concept(

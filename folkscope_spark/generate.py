@@ -123,22 +123,6 @@ def category_filter(pairs_enriched: DataFrame, category: str) -> DataFrame:
     )
 
 
-SKIP_WORDS = ["click", "http", "www", "login", "cookie", "javascript"]
-
-
-def skip_words_filter(parsed: DataFrame, skip_words: list[str] | None = None) -> DataFrame:
-    """P8 (extractor.py:337-339,393-395): drop sentences whose raw token set
-    intersects the skip set — pure columnar ``arrays_overlap`` against a
-    literal array, case-sensitive like the reference's ``set(tokens) &
-    skip_words``.  DataFrame twin of the in-UDF check in
-    :func:`folkscope_spark.parse.parse_assertions` (for inputs that still
-    carry a ``tokens`` column)."""
-    words = skip_words or SKIP_WORDS
-    return parsed.filter(
-        ~F.arrays_overlap("tokens", F.array(*[F.lit(w) for w in words]))
-    )
-
-
 def resume_filter(prompts: DataFrame, done_keys: DataFrame | None) -> DataFrame:
     """Anti-join resume primitive (J2; generation.py:222-230 key-cache)."""
     if done_keys is None:

@@ -15,8 +15,8 @@ Ports the *behavior* of the reference's igraph-backed retriever
 
 Also hosts the pattern-level helpers mined from ``pattern_miner.py``:
 canonicalization (``construct_pattern``), connectivity/shape checks,
-prefix/MUST match guards, subsumption dedupe, and the parent/child hierarchy
-used for bitmask short-circuiting (``pattern_miner.py:342-403,464-478``).
+prefix/MUST match guards and subsumption dedupe
+(``pattern_miner.py:464-478``).
 
 Patterns here are plain ``(pos_tags: tuple[str], edges: tuple[(u, elabel, v)])``
 pairs — exactly shape D7 — so they serialize straight into broadcast variables.
@@ -437,29 +437,6 @@ def dedupe_by_subsumption(patterns: list[Pattern]) -> list[Pattern]:
             if subisomorphic(graphs[j], graphs[i]):
                 dup.add(j)
     return [pt for k, pt in enumerate(patterns) if k not in dup]
-
-
-def build_hierarchy(patterns: list[Pattern]) -> list[dict]:
-    """Parent/child DAG over patterns by containment (pattern_miner.py:364-403):
-    pattern j is a parent of i when j (one vertex larger at most) contains i.
-    Returned as ``[{'parents': [...], 'children': [...]}]`` aligned to input order."""
-    n = len(patterns)
-    hierarchy = [{"parents": [], "children": []} for _ in range(n)]
-    graphs = [graph_of(pt) for pt in patterns]
-    order = sorted(range(n), key=lambda i: graphs[i].n)
-    for a in range(n):
-        i = order[a]
-        m, e = graphs[i].n, graphs[i].ecount
-        for b in range(a + 1, n):
-            j = order[b]
-            if graphs[j].n > m + 1:
-                break
-            if graphs[j].ecount < e:
-                continue
-            if subisomorphic(graphs[j], graphs[i]):
-                hierarchy[i]["parents"].append(j)
-                hierarchy[j]["children"].append(i)
-    return hierarchy
 
 
 def skeletonize_pattern(pattern: Pattern, template_indices) -> Pattern:

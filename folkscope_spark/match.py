@@ -2,14 +2,13 @@
 
 Spark-first port of the reference match sweep
 (``/root/reference/src/pattern/pattern_match.py:63-236``): the tiny pattern
-dictionary (with its subsumption hierarchy) is broadcast; sentences stream
-through ``mapInPandas`` in Arrow batches; per sentence the patterns are tried
-in the reference's structural descending order with the bitmask
-hierarchy short-circuit (``pattern_match.py:65,84-86,210-218``), the
-clause-separator veto (``:96-118``), the OPTIONAL-modifier closure
-(``:123-133``), and eventuality assembly with the eid byte-contract
-(``:135-160``, ``object.py:360-418``).  Per-sentence eid dedupe matches
-``:152-160``.
+dictionary ships in the UDF closure; sentences stream through
+``mapInPandas`` in Arrow batches; per sentence the patterns are tried in the
+reference's structural descending order, first match wins
+(``pattern_match.py:88``), with the clause-separator veto (``:96-118``), the
+OPTIONAL-modifier closure (``:123-133``), and eventuality assembly with the
+eid byte-contract (``:135-160``, ``object.py:360-418``).  Per-sentence eid
+dedupe matches ``:152-160``.
 
 Nothing here shuffles: the stage is a pure map over the parsed table; the
 only shuffle in the whole extraction path is the later ``groupBy(eid)`` merge.
@@ -75,11 +74,7 @@ def _optional_closure(
     return optional
 
 
-def extract_from_sentence(
-    parsed_row: dict,
-    patterns,
-    hierarchy=None,
-) -> list[dict]:
+def extract_from_sentence(parsed_row: dict, patterns) -> list[dict]:
     """Run the per-sentence match loop; returns eventuality dicts.
 
     Reference semantics (pattern_match.py:65-218) are
@@ -87,9 +82,10 @@ def extract_from_sentence(
     lines whose flag still equals the initial value (``:88``), so once any
     pattern yields a separator-veto-passing subiso on a line, no later
     pattern extracts from it; all accepted subisos of that first pattern are
-    extracted (eid-deduped within the line).  The child-bitmask propagation
-    (``:210-218``) only affects the sweep's *counting*, which the mining path
-    handles separately — ``hierarchy`` is accepted for API compatibility.
+    extracted (eid-deduped within the line).  The reference's parent/child
+    pattern DAG and its child-bitmask propagation (``:49,210-218``) only
+    affect the sweep's *counting*, which the mining path handles separately,
+    so neither is built here.
 
     One global coupling is assumed away: the reference skips a pattern's flag
     update when its canonical form fails the prefix/MUST/forbidden-end/
@@ -168,12 +164,10 @@ def match_patterns(
 ) -> DataFrame:
     """parsed (D6 + ``weight``) -> eventualities (D8): one output row per
     (parsed row, extracted eventuality), whose ``frequency`` is the parsed
-    row's ``weight`` (1.0 for a parsed frame without that column).  ``mined``
-    is the driver-side pattern dictionary from
+    row's ``weight``.  ``mined`` is the driver-side pattern dictionary from
     :func:`folkscope_spark.patterns.finish_patterns`; Spark serializes it into
     the UDF closure (same role as a broadcast — a few KB)."""
 
-    has_weight = "weight" in parsed.columns
     out_cols = [
         "eid", "sid", "relation", "pattern_sig", "words", "pos_tags",
         "dependencies", "skeleton_indices", "verb_indices", "ners",
@@ -182,7 +176,7 @@ def match_patterns(
 
     def run(batches):
         prepared = {
-            rel: ([(p, graph_of(p)) for p in info["patterns"]], info["hierarchy"])
+            rel: [(p, graph_of(p)) for p in info["patterns"]]
             for rel, info in mined.items()
         }
         # eid-determined fat columns (pos_tags, dependencies, skeleton/verb
@@ -198,17 +192,13 @@ def match_patterns(
         for pdf in batches:
             with batch_timer(kernel_acc):
                 cols: dict[str, list] = {c: [] for c in out_cols}
-                weights = (
-                    pdf["weight"].tolist() if has_weight else [1.0] * len(pdf)
-                )
                 for sid, rel, pos, lem, ner, deps, w in zip(
                     pdf["sid"].tolist(), pdf["relation"].tolist(),
                     pdf["pos_tags"], pdf["lemmas"], pdf["ners"],
-                    pdf["dependencies"], weights,
+                    pdf["dependencies"], pdf["weight"].tolist(),
                 ):
                     if rel not in prepared:
                         continue
-                    patterns, hierarchy = prepared[rel]
                     parsed_row = {
                         "pos_tags": list(pos),
                         "lemmas": list(lem),
@@ -217,9 +207,7 @@ def match_patterns(
                             (d["gov"], d["rel"], d["dep"]) for d in deps
                         ],
                     }
-                    extracted = extract_from_sentence(
-                        parsed_row, patterns, hierarchy
-                    )
+                    extracted = extract_from_sentence(parsed_row, prepared[rel])
                     if subset_dedupe:
                         extracted = skeleton_subset_dedupe(extracted)
                     for ev in extracted:
@@ -248,8 +236,8 @@ def match_patterns(
             # yield outside the timed block: suspended (Arrow) time not counted
             yield out
 
-    cols = ["sid", "relation", "pos_tags", "lemmas", "ners",
-            "dependencies"] + (["weight"] if has_weight else [])
+    cols = ["sid", "relation", "weight", "pos_tags", "lemmas", "ners",
+            "dependencies"]
     return parsed.select(cols).mapInPandas(run, schema=EVENTUALITIES)
 
 

@@ -20,8 +20,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-N_BUCKETS = 16
-
 
 def build_triples(
     events_with_scores: DataFrame,
@@ -69,14 +67,12 @@ def bucket_count(approx_rows: int, rows_per_bucket: int = 2_000_000, cap: int = 
     return max(1, min(cap, approx_rows // rows_per_bucket))
 
 
-def write_triples(
-    triples: DataFrame, path: str, approx_rows: int | None = None
-) -> None:
+def write_triples(triples: DataFrame, path: str, approx_rows: int) -> None:
     """Partition layout per north_rule: pred dirs x subj-hash buckets.
     Writes are idempotent per partition (INSERT OVERWRITE semantics).  The
-    bucket count is :func:`bucket_count` of ``approx_rows`` (pass a cheap
-    upstream estimate, e.g. corpus pages), else ``N_BUCKETS``."""
-    buckets = bucket_count(approx_rows) if approx_rows else N_BUCKETS
+    bucket count is :func:`bucket_count` of ``approx_rows``, a cheap upstream
+    estimate of the triple count (e.g. from corpus pages)."""
+    buckets = bucket_count(approx_rows)
     (
         triples.withColumn(
             "subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(buckets)).cast("int")

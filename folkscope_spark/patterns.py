@@ -16,9 +16,9 @@ memory cliff, so this scales with executors instead of driver RAM
 
 Driver-side finishing mirrors the reference miner: frequency cut at
 ``N * 1e-4`` (``pattern_miner.py:564-566``), connectivity/shape checks
-(``:256-302``), forbidden-end filter (``:574``), same-size isomorphism dedupe
-(``:464-478``) and the parent/child hierarchy (``:342-403``) — all on a
-pattern set of at most a few thousand rows, then re-broadcast to the matcher.
+(``:256-302``), forbidden-end filter (``:574``) and same-size isomorphism
+dedupe (``:464-478``) — all on a pattern set of at most a few thousand rows,
+then re-broadcast to the matcher.
 """
 
 from __future__ import annotations
@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from .graphs import (
     Pattern,
-    build_hierarchy,
     check_connect,
     check_match_with_must,
     check_match_with_prefix,
@@ -215,11 +214,9 @@ def length_cdf(parsed: DataFrame) -> dict[str, list[tuple[int, int]]]:
     """A2 driving the miner (pattern_filter.py:103-105): per-relation sentence
     token-length counts, computed distributed (one tiny groupBy) and collected
     as {relation: sorted [(length, count)]} for the driver-side schedule."""
-    has_weight = "weight" in parsed.columns
-    w = F.sum("weight") if has_weight else F.count("*")
     rows = (
         parsed.groupBy("relation", F.size("pos_tags").alias("length"))
-        .agg(w.cast("long").alias("cnt"))
+        .agg(F.sum("weight").cast("long").alias("cnt"))
         .collect()
     )
     out: dict[str, list[tuple[int, int]]] = {}
@@ -300,7 +297,6 @@ def finish_patterns(
 
         {"patterns": [(pos_tags, edges), ...]   # sorted desc, deduped
          "freqs": [int, ...],
-         "hierarchy": [{"parents": [...], "children": [...]}, ...],
          "anchor_len": int}
 
     Pattern sets are tiny by construction (thousands), so the O(n^2) sweeps
@@ -401,7 +397,6 @@ def finish_patterns(
         out[rel] = {
             "patterns": ordered,
             "freqs": [freq_map[p] for p in ordered],
-            "hierarchy": build_hierarchy(ordered),
             "anchor_len": lens.get(rel, 0),
         }
     return out
@@ -412,14 +407,14 @@ def merge_pattern_sets(mined: dict[str, dict]) -> dict:
     behavior — the shipped script crashes, SURVEY.md §3.4): union all
     relations' frequent patterns, sum counts of identical canonical patterns,
     drop same-size isomorphic duplicates (absorbing their counts into the
-    survivor), rebuild the hierarchy.  The merged set drives extraction for
-    the template-less ``open`` relation (scripts/run_match.sh:13-16)."""
+    survivor).  The merged set drives extraction for the template-less
+    ``open`` relation (scripts/run_match.sh:13-16)."""
     freq_map: dict[Pattern, int] = {}
     for info in mined.values():
         for pat, freq in zip(info["patterns"], info["freqs"]):
             freq_map[pat] = freq_map.get(pat, 0) + int(freq)
     if not freq_map:
-        return {"patterns": [], "freqs": [], "hierarchy": [], "anchor_len": 0}
+        return {"patterns": [], "freqs": [], "anchor_len": 0}
     survivors = dedupe_by_subsumption(list(freq_map))
     survivor_set = set(survivors)
     # absorb dropped duplicates' counts into their isomorphic survivor
@@ -436,7 +431,6 @@ def merge_pattern_sets(mined: dict[str, dict]) -> dict:
     return {
         "patterns": ordered,
         "freqs": [freq_map[p] for p in ordered],
-        "hierarchy": build_hierarchy(ordered),
         "anchor_len": 0,
     }
 

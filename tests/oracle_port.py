@@ -27,7 +27,6 @@ from folkscope_spark.match import extract_from_sentence
 from folkscope_spark.nlp import parse_sentence
 from folkscope_spark.patterns import enumerate_anchored, anchor_lens
 from folkscope_spark.graphs import (
-    build_hierarchy,
     check_connect,
     dedupe_by_subsumption,
     ends_forbidden,
@@ -145,7 +144,6 @@ def oracle_kg(
         mined[rel] = {
             "patterns": ordered,
             "freqs": [kept[p] for p in ordered],
-            "hierarchy": build_hierarchy(ordered),
         }
     if mined:
         from folkscope_spark.patterns import merge_pattern_sets
@@ -160,7 +158,6 @@ def oracle_kg(
         if rel not in mined:
             continue
         ordered = mined[rel]["patterns"]
-        hierarchy = mined[rel]["hierarchy"]
         prepared = [(p, graph_of(p)) for p in ordered]
 
         for tail, (parsed, w) in parses.items():
@@ -170,7 +167,7 @@ def oracle_kg(
                 "ners": parsed["ners"],
                 "dependencies": parsed["dependencies"],
             }
-            for ev in extract_from_sentence(row, prepared, hierarchy):
+            for ev in extract_from_sentence(row, prepared):
                 obj = " ".join(ev["words"])
                 for subj in subj_by_rel_tail[(rel, tail)]:
                     triples.add((subj, rel, obj))

@@ -343,11 +343,12 @@ def test_conceptualize_accepts_broadcast_topk(spark=None):
 
     spark = get_spark(app="t", master="local[2]", shuffle_partitions=2)
     rows = [
-        ("e1", "capableOf", ["dog", "run"], ["NN", "VB"], ["O", "O"], None, "p", 1.0)
+        ("e1", "capableOf", ["dog", "run"], ["NN", "VB"],
+         [{"O": 1.0}, {"O": 1.0}], [(1, "nsubj", 0)], "p", 1.0)
     ]
     schema = (
         "eid string, relation string, words array<string>, "
-        "pos_tags array<string>, ners array<string>, "
+        "pos_tags array<string>, ner_counters array<map<string,double>>, "
         "dependencies array<struct<gov:int,rel:string,dep:int>>, "
         "pattern_sig string, frequency double"
     )

@@ -2,7 +2,6 @@
 
 from folkscope_spark.graphs import (
     DiGraph,
-    build_hierarchy,
     check_connect,
     check_match_with_must,
     check_match_with_prefix,
@@ -116,22 +115,13 @@ def test_normalize_pattern_fuzzy_punct():
 def test_dedupe_by_subsumption():
     # Reference semantics (pattern_match.py:37-45): the sweep passes the
     # *earlier/larger* pattern as the needle, so only same-size isomorphic
-    # duplicates are removed; a smaller contained pattern survives (it becomes
-    # a hierarchy child instead).
+    # duplicates are removed; a smaller contained pattern survives.
     big = (("PRP", "VBP", "JJ"), ((2, "nsubj", 0), (2, "cop", 1)))
     dup_of_big = (("PRP", "VBP", "JJ"), ((2, "nsubj", 0), (2, "cop", 1)))
     small = (("PRP", "JJ"), ((1, "nsubj", 0),))
     out = dedupe_by_subsumption([small, big, dup_of_big])
     assert len(out) == 2
     assert big in out and small in out
-
-
-def test_build_hierarchy_parent_child():
-    big = (("PRP", "VBP", "JJ"), ((2, "nsubj", 0), (2, "cop", 1)))
-    small = (("PRP", "JJ"), ((1, "nsubj", 0),))
-    h = build_hierarchy([big, small])
-    assert 1 in h[0]["children"]
-    assert 0 in h[1]["parents"]
 
 
 def test_skeletonize_keeps_template():

@@ -12,7 +12,6 @@ from collections import Counter
 from copy import deepcopy
 
 from folkscope_spark.graphs import (
-    build_hierarchy,
     check_connect,
     dedupe_by_subsumption,
     ends_forbidden,
@@ -114,11 +113,10 @@ def test_match_vs_reference_port():
     # the two dedupe implementations must agree first
     assert ordered == ref.dedupe_and_sort_patterns(list(raw))
     prepared = [(p, graph_of(p)) for p in ordered]
-    hierarchy = build_hierarchy(ordered)
 
     n_with_events = 0
     for line, ref_line in zip(lines, ref_lines):
-        repo_evs = [_norm_repo(e) for e in extract_from_sentence(line, prepared, hierarchy)]
+        repo_evs = [_norm_repo(e) for e in extract_from_sentence(line, prepared)]
         ref_evs = [_norm_ref(e) for e in ref_line["eventualities"] if e["words"]]
         assert repo_evs == ref_evs, line["sid"]
         if repo_evs:

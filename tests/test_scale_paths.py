@@ -232,20 +232,17 @@ def test_match_fat_thinning_keyed_by_relation_and_eid(spark):
     from folkscope_spark.match import match_patterns, merge_eventualities
 
     pat = (("NN", "VBP"), ((1, "nsubj", 0),))
-    mined = {
-        rel: {"patterns": [pat], "hierarchy": [{"parents": [], "children": []}]}
-        for rel in ("capableOf", "usedFor")
-    }
+    mined = {rel: {"patterns": [pat]} for rel in ("capableOf", "usedFor")}
     rows = [
-        ("s1", "capableOf", ["NNS", "VBP"], ["dog", "run"], ["O", "O"],
+        ("s1", "capableOf", 1.0, ["NNS", "VBP"], ["dog", "run"], ["O", "O"],
          [{"gov": 1, "rel": "nsubj", "dep": 0}]),
-        ("s2", "usedFor", ["NNS", "VBP"], ["dog", "run"], ["O", "O"],
+        ("s2", "usedFor", 1.0, ["NNS", "VBP"], ["dog", "run"], ["O", "O"],
          [{"gov": 1, "rel": "nsubj", "dep": 0}]),
-        ("s3", "capableOf", ["NNS", "VBP"], ["dog", "run"], ["O", "O"],
+        ("s3", "capableOf", 1.0, ["NNS", "VBP"], ["dog", "run"], ["O", "O"],
          [{"gov": 1, "rel": "nsubj", "dep": 0}]),
     ]
     schema = (
-        "sid string, relation string, pos_tags array<string>, "
+        "sid string, relation string, weight double, pos_tags array<string>, "
         "lemmas array<string>, ners array<string>, "
         "dependencies array<struct<gov:int,rel:string,dep:int>>"
     )

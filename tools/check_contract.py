@@ -4,13 +4,14 @@ order-insensitive value hash."""
 
 from __future__ import annotations
 
+import os
 import sys
 import hashlib
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def value_hash(pdf: pd.DataFrame) -> str:

@@ -13,11 +13,13 @@ if an assertion fails.
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF = "/root/testdata/sf0.01"
 
@@ -192,9 +194,12 @@ def main():
     from folkscope_spark.conceptualize import conceptualize, probase_topk
 
     ev2 = spark.createDataFrame(
-        [("e1", "capableOf", ["a", "cotton"], ["DT", "NN"], 1.0)],
+        [("e1", "capableOf", ["a", "cotton"], ["DT", "NN"],
+          [{"O": 1.0}, {"O": 1.0}], [(1, "det", 0)], "s-v", 1.0)],
         "eid string, relation string, words array<string>, "
-        "pos_tags array<string>, frequency double",
+        "pos_tags array<string>, ner_counters array<map<string,double>>, "
+        "dependencies array<struct<gov:int,rel:string,dep:int>>, "
+        "pattern_sig string, frequency double",
     )
     pb = spark.createDataFrame(
         [("material", "cotton", 10)], "concept string, instance string, freq long"
@@ -209,7 +214,7 @@ def main():
         ],
     )
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("# Physical-plan audit (generated by tools/explain_audit.py)\n\n")
         f.write("Asserted plan properties for the load-bearing operators; the full\n")
         f.write('`explain("formatted")` output follows each section.\n\n')
