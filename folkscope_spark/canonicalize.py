@@ -266,25 +266,22 @@ def _lsh_cc_driver(
     with np.errstate(over="ignore"):
         mixed = A[:, None] * base[None, :] + B[:, None]  # (n_hashes, V), mod 2^64
 
-    # fully vectorized signatures: CSR layout of token indices + one
-    # minimum.reduceat per hash row (the per-form numpy-call loop was the
-    # residual fixed driver cost at dimension scale)
+    # fully vectorized signatures: CSR layout of token indices (form i owns
+    # flat[offs[i]:offs[i + 1]]) + one minimum.reduceat per hash row (the
+    # per-form numpy-call loop was the residual fixed driver cost at
+    # dimension scale).  The verify below reads the same layout.
     n = len(texts)
-    nonempty = [i for i, s in enumerate(tok_sets) if s]
+    sizes = np.fromiter((len(s) for s in tok_sets), dtype=np.int64, count=n)
+    offs = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(sizes, out=offs[1:])
+    flat = np.fromiter(
+        (vocab[t] for s in tok_sets for t in s), dtype=np.int64, count=int(offs[-1])
+    )
+    nonempty = np.flatnonzero(sizes)
     sigs = np.zeros((n_hashes, n), dtype=np.uint64)
-    if nonempty:
-        counts = np.fromiter(
-            (len(tok_sets[i]) for i in nonempty), dtype=np.int64, count=len(nonempty)
-        )
-        starts = np.zeros(len(nonempty), dtype=np.int64)
-        np.cumsum(counts[:-1], out=starts[1:])
-        flat = np.fromiter(
-            (vocab[t] for i in nonempty for t in tok_sets[i]),
-            dtype=np.int64,
-            count=int(counts.sum()),
-        )
-        sigs[:, np.asarray(nonempty, dtype=np.int64)] = np.minimum.reduceat(
-            mixed[:, flat], starts, axis=1
+    if nonempty.size:
+        sigs[:, nonempty] = np.minimum.reduceat(
+            mixed[:, flat], offs[nonempty], axis=1
         )
 
     # vectorized banding: group forms by exact band signature via np.unique
@@ -337,45 +334,31 @@ def _lsh_cc_driver(
             lo, hi = (ra, rb) if texts[ra] < texts[rb] else (rb, ra)
             parent[hi] = lo
 
-    # exact-Jaccard verify over the unique candidate pairs.  Near-duplicate
-    # surface forms share a small vocabulary, so when it fits a bounded bit
-    # width the token sets become rows of a uint64 bitmask matrix and the
-    # whole verify vectorizes: |A∩B| by AND + 16-bit-LUT popcount,
-    # |A∪B| = |A|+|B|-|A∩B|, one float comparison — only the few surviving
-    # pairs reach the Python union-find.  Large vocabularies keep the
-    # frozenset path; both compute the identical Jaccard ratio.
-    n_words = (len(vocab) + 63) // 64
-    if packed.size and 0 < n_words <= 64:
-        maskmat = np.zeros((n, max(n_words, 1)), dtype=np.uint64)
-        for i, s in enumerate(tok_sets):
-            row = maskmat[i]
-            for t in s:
-                j = vocab[t]
-                row[j >> 6] |= np.uint64(1) << np.uint64(j & 63)
-        sizes = np.fromiter((len(s) for s in tok_sets), dtype=np.int64, count=n)
-        lut = np.array([bin(x).count("1") for x in range(65536)], dtype=np.uint8)
-        for lo_i in range(0, packed.size, 2_000_000):  # bound temp memory
-            chunk = packed[lo_i : lo_i + 2_000_000]
-            pa = chunk // n
-            pb = chunk % n
-            andw = maskmat[pa] & maskmat[pb]
-            inter = (
-                lut[andw.view(np.uint16)]
-                .reshape(chunk.size, -1)
-                .sum(axis=1)
-                .astype(np.int64)
-            )
-            union = sizes[pa] + sizes[pb] - inter
-            ok = (union > 0) & ((inter / np.maximum(union, 1)) >= jaccard_threshold)
-            for a, b in zip(pa[ok].tolist(), pb[ok].tolist()):
-                unite(a, b)
-    else:
-        for key in packed.tolist():
-            a, b = divmod(key, n)
-            sa, sb = tok_sets[a], tok_sets[b]
-            union = len(sa | sb)
-            if union and len(sa & sb) / union >= jaccard_threshold:
-                unite(a, b)
+    # exact-Jaccard verify over the unique candidate pairs, vectorized for
+    # any vocabulary size: each of a's tokens is looked up among b's in the
+    # sorted (form * V + token) keys, the hits per pair are |A∩B|,
+    # |A∪B| = |A|+|B|-|A∩B|, and one float division decides — only the few
+    # surviving pairs reach the Python union-find.  Pairs are chunked so one
+    # chunk expands to at most ~4M (pair, token) lookups.
+    n_vocab = max(len(vocab), 1)
+    keys = np.sort(np.repeat(np.arange(n, dtype=np.int64), sizes) * n_vocab + flat)
+    step = max(1, 4_000_000 // max(int(sizes.max(initial=0)), 1))
+    for lo_i in range(0, packed.size, step):
+        chunk = packed[lo_i : lo_i + step]
+        pa = chunk // n
+        pb = chunk % n
+        la = sizes[pa]
+        pair = np.repeat(np.arange(chunk.size), la)
+        # position of each expanded lookup in flat: a's token run, in order
+        pos = np.arange(int(la.sum())) + np.repeat(offs[pa] - (np.cumsum(la) - la), la)
+        q = pb[pair] * n_vocab + flat[pos]
+        idx = np.minimum(np.searchsorted(keys, q), keys.size - 1)
+        hit = keys[idx] == q
+        inter = np.bincount(pair[hit], minlength=chunk.size)
+        union = la + sizes[pb] - inter
+        ok = (union > 0) & ((inter / np.maximum(union, 1)) >= jaccard_threshold)
+        for a, b in zip(pa[ok].tolist(), pb[ok].tolist()):
+            unite(a, b)
     out = []
     for i, t in enumerate(texts):
         canon = texts[find(i)]

@@ -17,7 +17,6 @@ the key columns cross into Python; the prompt strings are rebuilt in the JVM
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from .relations import PROMPTS, POS_TEMPLATES, RELATIONS
@@ -136,7 +135,8 @@ def generate_assertions(prompts: DataFrame, dense_tails: bool = False) -> DataFr
     hash-seeded template filling — same interface, deterministic).
     ``dense_tails`` selects the length-diverse surrogate corpus (see
     :func:`folkscope_spark.synthetic.gen_tail`).  The output carries no
-    ``prompt``: :func:`explode_assertions` rebuilds it.
+    ``prompt`` (:func:`explode_assertions` rebuilds it) and no ``key``
+    (nothing downstream reads it).
     """
     # Only the key columns cross the Python boundary (guide §4.1): the
     # surrogate derives continuations from (pair_key, relation, seq), and
@@ -145,7 +145,7 @@ def generate_assertions(prompts: DataFrame, dense_tails: bool = False) -> DataFr
     # ``explode_assertions`` rebuilds the prompt deterministically in the
     # JVM from the broadcast dimensions (the reference builds prompts from
     # titles inside its generator process too — generation.py:170-185).
-    slim = prompts.select("item_a", "item_b", "relation", "pair_key", "key")
+    slim = prompts.select("item_a", "item_b", "relation", "pair_key")
 
     def gen(batches):
         for pdf in batches:
@@ -158,7 +158,7 @@ def generate_assertions(prompts: DataFrame, dense_tails: bool = False) -> DataFr
             yield pdf
 
     schema = T.StructType(
-        [f for f in GENERATIONS.fields if f.name != "prompt"]
+        [f for f in GENERATIONS.fields if f.name not in ("prompt", "key")]
     )
     return slim.mapInPandas(gen, schema=schema)
 

@@ -160,16 +160,6 @@ def graph_of(pattern: Pattern) -> DiGraph:
     return DiGraph(pattern[0], pattern[1])
 
 
-def _node_compat(g: DiGraph, p: DiGraph, gv: int, pv: int) -> bool:
-    if g.indeg[gv] < p.indeg[pv]:
-        return False
-    pl = p.vlabels[pv]
-    gl = g.vlabels[gv]
-    if pl in ("NN", "RB", "JJ"):
-        return gl.startswith(pl)
-    return gl == pl
-
-
 def precheck(g: DiGraph, p: DiGraph) -> bool:
     """Label-multiset + degree-signature pruning (retriever lines 143-231).
 

@@ -142,8 +142,8 @@ def skeleton_subset_dedupe(eventualities: list[dict]) -> list[dict]:
     """U4 (extractor.py:480-507): among one sentence's extracted
     eventualities, drop any whose skeleton index set is a subset of
     another's.  The reference's ASER-style extractor applies this; its
-    pattern_match entry point does not — exposed here as an opt-in
-    post-filter (``match_patterns(..., subset_dedupe=True)``)."""
+    pattern_match entry point does not, so neither does
+    :func:`match_patterns`."""
     keep = [True] * len(eventualities)
     sets = [set(ev.get("skeleton_indices") or []) for ev in eventualities]
     order = sorted(range(len(sets)), key=lambda i: len(sets[i]), reverse=True)
@@ -158,10 +158,7 @@ def skeleton_subset_dedupe(eventualities: list[dict]) -> list[dict]:
     return [ev for k, ev in zip(keep, eventualities) if k]
 
 
-def match_patterns(
-    parsed: DataFrame, mined: dict, subset_dedupe: bool = False,
-    kernel_acc=None,
-) -> DataFrame:
+def match_patterns(parsed: DataFrame, mined: dict, kernel_acc=None) -> DataFrame:
     """parsed (D6 + ``weight``) -> eventualities (D8): one output row per
     (parsed row, extracted eventuality), whose ``frequency`` is the parsed
     row's ``weight``.  ``mined`` is the driver-side pattern dictionary from
@@ -207,10 +204,7 @@ def match_patterns(
                             (d["gov"], d["rel"], d["dep"]) for d in deps
                         ],
                     }
-                    extracted = extract_from_sentence(parsed_row, prepared[rel])
-                    if subset_dedupe:
-                        extracted = skeleton_subset_dedupe(extracted)
-                    for ev in extracted:
+                    for ev in extract_from_sentence(parsed_row, prepared[rel]):
                         fat = (rel, ev["eid"]) not in fat_seen
                         if fat:
                             fat_seen.add((rel, ev["eid"]))

@@ -296,8 +296,7 @@ def finish_patterns(
     """Driver-side miner finishing.  Returns, per relation::
 
         {"patterns": [(pos_tags, edges), ...]   # sorted desc, deduped
-         "freqs": [int, ...],
-         "anchor_len": int}
+         "freqs": [int, ...]}
 
     Pattern sets are tiny by construction (thousands), so the O(n^2) sweeps
     are driver-side, like the reference (SURVEY.md U3/O4) — but the
@@ -308,7 +307,6 @@ def finish_patterns(
     enumeration emits up to ~200 signatures/sentence); collecting it first
     was a driver OOM (VERDICT r1, wrong #1).
     """
-    lens = anchor_lens()
     spark = pattern_counts.sparkSession
     cut_rows = [
         (rel, max(min_freq_abs, int(n * min_freq_ratio)))
@@ -397,7 +395,6 @@ def finish_patterns(
         out[rel] = {
             "patterns": ordered,
             "freqs": [freq_map[p] for p in ordered],
-            "anchor_len": lens.get(rel, 0),
         }
     return out
 
@@ -414,7 +411,7 @@ def merge_pattern_sets(mined: dict[str, dict]) -> dict:
         for pat, freq in zip(info["patterns"], info["freqs"]):
             freq_map[pat] = freq_map.get(pat, 0) + int(freq)
     if not freq_map:
-        return {"patterns": [], "freqs": [], "anchor_len": 0}
+        return {"patterns": [], "freqs": []}
     survivors = dedupe_by_subsumption(list(freq_map))
     survivor_set = set(survivors)
     # absorb dropped duplicates' counts into their isomorphic survivor
@@ -431,7 +428,6 @@ def merge_pattern_sets(mined: dict[str, dict]) -> dict:
     return {
         "patterns": ordered,
         "freqs": [freq_map[p] for p in ordered],
-        "anchor_len": 0,
     }
 
 

@@ -54,13 +54,11 @@ def run_pipeline(
     max_extra: int = 2,
     dedupe_parse: bool = True,
     with_concept_text: bool = False,
-    skip_words=None,
     adaptive_mining: bool = False,
     dense_tails: bool = False,
     probase: DataFrame | None = None,
     probase_rows: int | None = None,
     probase_mode: str = "auto",
-    start_index_mode: str = "tokens",
 ) -> dict:
     """Returns {"triples": DataFrame, "stages": {stage: seconds}, ...}.
 
@@ -90,9 +88,7 @@ def run_pipeline(
     # framework (Arrow/shuffle/schedule) overhead
     kernel_timers = KernelTimers(spark)
     fp = (f"v1:n_pages={n_pages}:n_items={n_items}"
-          f":extra={max_extra}:dense={dense_tails}"
-          f":skip={','.join(sorted(skip_words)) if skip_words else ''}"
-          f":sidx={start_index_mode}")
+          f":extra={max_extra}:dense={dense_tails}")
 
     def timed(name, fn):
         t0 = time.time()
@@ -214,8 +210,7 @@ def run_pipeline(
         lambda: store.stage(
             spark, "parsed", fp,
             lambda: parse.parse_assertions(
-                scored, skip_words=skip_words,
-                kernel_acc=kernel_timers["parse"],
+                scored, kernel_acc=kernel_timers["parse"]
             ),
         ),
     )
@@ -383,7 +378,6 @@ def run_pipeline(
                 fp,
                 lambda: conceptualize(
                     events, topk_map, topk_table=topk_table, max_gram_len=gram_len,
-                    start_index_mode=start_index_mode,
                     kernel_acc=kernel_timers["conceptualize"],
                 ),
             ),
@@ -432,7 +426,6 @@ def run_pipeline(
                     fp,
                     lambda: conceptualize_text(
                         parsed, topk_map, topk_table=topk_table, max_gram_len=gram_len,
-                        start_index_mode=start_index_mode,
                         kernel_acc=kernel_timers["concept_text"],
                     ),
                 ),

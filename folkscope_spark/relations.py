@@ -94,7 +94,6 @@ PRONOUN_SET = frozenset(
 )
 
 PUNCTUATION_SET = frozenset(list("""!"#&'*+,-..../:;<=>?@[\\]^_`|~""") + ["``", "''"])
-CLAUSE_SEPARATOR_SET = frozenset(list(".,:;?!~-") + ["..", "...", "--", "---"])
 
 
 def minable_relations(reference_parity: bool = False) -> list[str]:

@@ -75,7 +75,6 @@ class SnapshotStore:
         stage: str,
         df: DataFrame,
         fingerprint: str,
-        partition_by: list[str] | None = None,
         detail: str = "",
     ) -> DataFrame:
         """Write the stage output, record per-partition counters, then
@@ -95,10 +94,7 @@ class SnapshotStore:
         # versioned data dir: never write over the previous snapshot (whose
         # files may be inputs of this very plan, e.g. the J2 resume union)
         path = os.path.join(self.data_path(stage), snapshot_id)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+        df.write.mode("overwrite").parquet(path)
 
         committed = spark.read.parquet(path)
         # per-partition lineage counters (one cheap agg over the committed data)
@@ -164,7 +160,6 @@ class SnapshotStore:
         stage: str,
         fingerprint: str,
         build,
-        partition_by: list[str] | None = None,
         detail: str = "",
     ) -> DataFrame:
         """Run-or-resume: if a committed snapshot matches the fingerprint,
@@ -172,91 +167,8 @@ class SnapshotStore:
         otherwise build, commit, return."""
         if self.is_committed(stage, fingerprint):
             return self.read(spark, stage)
-        return self.commit(stage, build(), fingerprint, partition_by, detail)
+        return self.commit(stage, build(), fingerprint, detail)
 
     def metrics(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(os.path.join(self.root, "metrics"))
 
-
-# ---------------------------------------------------------- Iceberg switch
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when a real Iceberg catalog can back the snapshot layer: the
-    session was started with IcebergSparkSessionExtensions AND the runtime
-    jar is on the classpath.  Offline sandboxes return False and the parquet
-    manifest layer (same commit/resume contract) is used instead."""
-    try:
-        ext = spark.conf.get("spark.sql.extensions", "") or ""
-    except Exception:
-        return False
-    if "IcebergSparkSessionExtensions" not in ext:
-        return False
-    try:
-        # py4j returns a JavaPackage (no exception) for a missing class via
-        # attribute access, so probe with Class.forName, which actually throws
-        # when the runtime jar is absent (ADVICE r2)
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.catalog.Catalog")
-        return True
-    except Exception:
-        return False
-
-
-class IcebergSnapshotStore(SnapshotStore):
-    """Snapshot layer on a real Iceberg catalog: each stage is a table
-    ``<catalog>.<namespace>.<stage>`` written with ``writeTo(...).
-    createOrReplace()`` (an atomic Iceberg snapshot commit), the input
-    fingerprint stored as a table property, resume = property match on the
-    current snapshot.  Only constructible when :func:`iceberg_available`;
-    the interface is identical to :class:`SnapshotStore`, so the pipeline is
-    agnostic."""
-
-    def __init__(self, root: str, spark: SparkSession, catalog: str, namespace: str = "folkscope"):
-        super().__init__(root)  # metrics/lineage stay parquet-backed
-        if not iceberg_available(spark):
-            raise RuntimeError(
-                "Iceberg extensions/jar not present in this session; "
-                "use SnapshotStore (parquet manifest layer) instead"
-            )
-        self.spark = spark
-        self.catalog = catalog
-        self.namespace = namespace
-        spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {catalog}.{namespace}")
-
-    def _table(self, stage: str) -> str:
-        return f"{self.catalog}.{self.namespace}.{stage}"
-
-    def is_committed(self, stage: str, fingerprint: str) -> bool:
-        try:
-            props = {
-                r["key"]: r["value"]
-                for r in self.spark.sql(
-                    f"SHOW TBLPROPERTIES {self._table(stage)}"
-                ).collect()
-            }
-        except Exception:
-            return False
-        return props.get("folkscope.fingerprint") == fingerprint
-
-    def read(self, spark: SparkSession, stage: str) -> DataFrame:
-        return spark.read.table(self._table(stage))
-
-    def commit(self, stage, df, fingerprint, partition_by=None, detail=""):
-        w = df.writeTo(self._table(stage)).tableProperty(
-            "folkscope.fingerprint", fingerprint
-        )
-        if partition_by:
-            from pyspark.sql import functions as F
-
-            w = w.partitionedBy(*[F.col(c) for c in partition_by])
-        w.createOrReplace()  # atomic Iceberg snapshot commit
-        return self.read(df.sparkSession, stage)
-
-
-def make_store(root: str, spark: SparkSession | None = None, catalog: str | None = None):
-    """Factory: a real Iceberg-backed store when the catalog + jar are
-    present, else the parquet manifest layer — same contract either way
-    (SURVEY §7 config switch)."""
-    if catalog and spark is not None and iceberg_available(spark):
-        return IcebergSnapshotStore(root, spark, catalog)
-    return SnapshotStore(root)

@@ -1,4 +1,4 @@
-"""J7/A6/D12 feature-stage tests + U4 subset dedupe."""
+"""J7/A6/D12 feature-stage tests + U4 subset dedupe + P8 skip words."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -77,3 +77,32 @@ def test_skeleton_subset_dedupe():
     ]
     out = skeleton_subset_dedupe(evs)
     assert [e["eid"] for e in out] == ["a", "c"]
+
+
+def test_parse_assertions_skip_words(spark):
+    """P8 (extractor.py:337-339,393-395): a sentence whose raw tokens meet
+    the skip set is dropped.  The check is the reference's case-sensitive
+    set intersection, so a capitalized token does not match."""
+    import hashlib
+
+    from folkscope_spark.parse import parse_assertions
+
+    tails = [
+        "capable of keeping cotton warm",
+        "capable of keeping Cotton warm",
+        "capable of keeping people warm",
+        "capable of keeping people warm",
+    ]
+    assertions = spark.createDataFrame(
+        [("capableOf", t) for t in tails], "relation string, tail string"
+    )
+    rows = parse_assertions(assertions, skip_words={"cotton"}).collect()
+    # sid = md5(relation || tail) names the distinct tail each row parses
+    sid = {
+        hashlib.md5(f"capableOf\x1f{t}".encode()).hexdigest(): t for t in tails
+    }
+    got = {sid[r["sid"]]: r["weight"] for r in rows}
+    assert got == {
+        "capable of keeping Cotton warm": 1.0,
+        "capable of keeping people warm": 2.0,
+    }

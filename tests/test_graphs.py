@@ -9,7 +9,6 @@ from folkscope_spark.graphs import (
     dedupe_by_subsumption,
     ends_forbidden,
     get_subisomorphisms,
-    graph_of,
     normalize_pattern,
     precheck,
     skeletonize_pattern,

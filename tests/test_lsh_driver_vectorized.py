@@ -1,11 +1,13 @@
-"""Round-6 optimization guards for the vectorized driver LSH verify.
+"""Guards for the vectorized driver LSH verify.
 
-`_lsh_cc_driver`'s exact-Jaccard verify was vectorized (uint64 bitmask
-matrix + popcount LUT for bounded vocabularies; frozenset fallback above
-4096 distinct tokens).  These tests pin that both paths compute the same
-clusters, including at the exact threshold boundary where float semantics
-matter (inter/union >= threshold is computed as a division on both paths,
-never as inter >= threshold*union, which rounds differently).
+`_lsh_cc_driver`'s exact-Jaccard verify is one vectorized count (sorted
+form*V+token keys, searchsorted lookups, bincount per pair) for any
+vocabulary size.  It once had two paths, a bitmask for up to 4096 distinct
+tokens and a frozenset loop above, which the test names still recall.
+These tests pin the clusters against a brute-force reference on small and
+large (>4096 token) vocabularies, including at the exact threshold boundary
+where float semantics matter (inter/union >= threshold is computed as a
+division, never as inter >= threshold*union, which rounds differently).
 """
 
 from __future__ import annotations

@@ -28,7 +28,19 @@ def plan_of(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    return buf.getvalue()
+    return stable_ids(buf.getvalue())
+
+
+def stable_ids(plan: str) -> str:
+    """Renumber Spark's per-session ``[plan_id=N]`` and ``#N`` expression ids
+    in order of first appearance, so an unchanged plan prints the same text
+    in every session and PLANS.md changes only where a plan does."""
+    for pattern in (r"(?<=\[plan_id=)\d+", r"(?<=#)\d+"):
+        ids: dict[str, int] = {}
+        plan = re.sub(
+            pattern, lambda m: str(ids.setdefault(m.group(), len(ids) + 1)), plan
+        )
+    return plan
 
 
 def main():
