@@ -108,6 +108,41 @@ def test_canonicalize_surface_forms_matches_exact_jaccard_closure(spark):
         assert got == want, kw
 
 
+def test_canonicalize_tiers_emit_same_rewrite_table(spark):
+    """The driver tier (the default) and the distributed tier
+    (``driver_threshold=0``) give the same rewrite table: same tokenizer,
+    same MinHash and the same band buckets, so even the pairs LSH banding
+    misses are the same.  1,000 planted J = 10/11 pairs (each misses with
+    p ~ 1.4%) plus forms that differ only in case or whitespace."""
+    from folkscope_spark.canonicalize import canonicalize_surface_forms
+
+    forms = []
+    for i in range(1000):
+        base = " ".join("p%dw%d" % (i, j) for j in range(10))
+        forms += [base, base + " p%dx" % i]
+    forms += [
+        "red apple pie", " red apple pie", "red apple pie ", "red apple pie",
+        "red\tapple pie", "RED Apple pie", "", " ",
+    ]
+    df = spark.createDataFrame([(t,) for t in forms], "obj string")
+
+    def table(**kw):
+        return {
+            (r["text"], r["canonical_text"])
+            for r in canonicalize_surface_forms(df, "obj", **kw).collect()
+        }
+
+    driver = table()
+    assert table(driver_threshold=0) == driver
+    # every case/whitespace variant joins the lexicographic-min spelling;
+    # the whitespace-only forms have no tokens and are never rewritten
+    assert {(t, c) for t, c in driver if "apple" in t.lower()} == {
+        (t, " red apple pie") for t in forms[-8:-2] if t != " red apple pie"
+    }
+    assert not {t for t, _ in driver} & {"", " "}
+    assert len(driver) > 950
+
+
 def test_pr_curve_binned_matches_exact_at_bin_edges(spark):
     """With scores exactly on bin edges the binned sweep reproduces the exact
     per-row sweep's cumulative counts."""
