@@ -3,115 +3,137 @@
 north_rule requirement: cluster near-duplicate surface forms and resolve each
 cluster to one canonical representative before materializing triples.
 
-Implemented with **relational primitives only** (no GraphFrames jar, no ml
-pipeline state):
+One MinHash-LSH definition, run by two execution tiers.  The definition is
+:func:`_minhash_bands`:
 
-* MinHash signatures: ``explode(tokens) -> xxhash64(seed, token) ->
-  groupBy(id, seed).min`` — one shuffle, vectorized JVM hashing, any number of
-  permutations;
-* LSH banding: signatures folded into ``n_bands`` band keys; candidate pairs
-  come from a self-equi-join on (band, band_hash) — never an all-pairs
-  crossJoin.  Hot buckets are capped (``max_bucket``) to bound the join blowup
-  a degenerate band would cause at web scale;
-* verification: exact token-set Jaccard via ``array_intersect``/``array_union``;
-* connected components: alternating small-star / large-star DataFrame joins
-  (Kiveris et al.), iterated to fixpoint with a convergence check — each
-  iteration is two shuffles on the edge list, the standard scale-out CC.
+* tokens: the set of ``str.lower().split()`` (Python's Unicode whitespace,
+  so leading/trailing spaces, tabs and NBSP never make a token);
+* MinHash: one md5 per distinct token, then ``N_HASHES`` md5-derived
+  multiply-add permutations mod 2^64, minimized per form in numpy;
+* LSH bands: ``N_BANDS`` exact keys of ``N_HASHES // N_BANDS`` signature
+  values each, never re-hashed, so a bucket holds exactly the forms whose
+  band agrees.  Buckets above ``MAX_BUCKET`` forms are dropped (a skew guard
+  against the join blowup of a degenerate band);
+* verification: exact token-set Jaccard >= ``JACCARD_THRESHOLD``; a form
+  with no tokens matches nothing;
+* clusters: verified pairs closed transitively, canonical member = the
+  lexicographic-min text of each cluster.
 
-Deterministic end to end: hash seeds fixed, canonical member = lexicographic
-min of each component.
+Both tiers emit the same rewrite table; ``driver_threshold`` picks only
+where it runs.  The driver tier collects the distinct forms, runs the kernel
+once and closes pairs with a union-find.  The distributed tier runs the
+kernel in one ``mapInPandas``, finds candidate pairs by a self-equi-join on
+(band, key) -- never an all-pairs crossJoin -- verifies them with
+``array_intersect``/``array_union`` and closes them with
+:func:`connected_components`.  Deterministic end to end: hash constants are
+fixed.
 """
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+JACCARD_THRESHOLD = 0.9
+N_HASHES = 16
+N_BANDS = 4
+MAX_BUCKET = 256
 
-def tokenize_col(df: DataFrame, text_col: str) -> DataFrame:
-    return df.withColumn(
-        "_tokens", F.array_distinct(F.split(F.lower(F.col(text_col)), r"\s+"))
+_BAND_COLS = ["b%d" % b for b in range(N_BANDS)]
+_PERMS = [hashlib.md5(b"perm-%d" % s).digest() for s in range(N_HASHES)]
+_A = np.array([int.from_bytes(c[:8], "big") | 1 for c in _PERMS], dtype=np.uint64)
+_B = np.array([int.from_bytes(c[8:16], "big") for c in _PERMS], dtype=np.uint64)
+
+
+def _minhash_bands(texts: list[str]):
+    """The MinHash-LSH kernel both tiers run.
+
+    Returns ``(tok_sets, offs, flat, bands)``: each text's token set, their
+    CSR layout as token ids (text i owns ``flat[offs[i]:offs[i + 1]]``) and
+    ``N_BANDS`` contiguous ``(len(texts), N_HASHES // N_BANDS)`` uint64
+    arrays of exact band keys.  A text with no tokens gets all-zero keys."""
+    tok_sets = [frozenset((t or "").lower().split()) for t in texts]
+    # one md5 per distinct token, then the permutations applied in numpy
+    vocab: dict[str, int] = {}
+    for s in tok_sets:
+        for tok in s:
+            if tok not in vocab:
+                vocab[tok] = len(vocab)
+    base = np.empty(max(len(vocab), 1), dtype=np.uint64)
+    for tok, i in vocab.items():
+        base[i] = int.from_bytes(hashlib.md5(tok.encode()).digest()[:8], "big")
+    with np.errstate(over="ignore"):
+        mixed = _A[:, None] * base[None, :] + _B[:, None]  # (N_HASHES, V), mod 2^64
+
+    # one minimum.reduceat per hash row over the CSR layout
+    n = len(texts)
+    sizes = np.fromiter((len(s) for s in tok_sets), dtype=np.int64, count=n)
+    offs = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(sizes, out=offs[1:])
+    flat = np.fromiter(
+        (vocab[t] for s in tok_sets for t in s), dtype=np.int64, count=int(offs[-1])
     )
+    nonempty = np.flatnonzero(sizes)
+    sigs = np.zeros((N_HASHES, n), dtype=np.uint64)
+    if nonempty.size:
+        sigs[:, nonempty] = np.minimum.reduceat(
+            mixed[:, flat], offs[nonempty], axis=1
+        )
+    rows = N_HASHES // N_BANDS
+    bands = [
+        np.ascontiguousarray(sigs[b * rows : (b + 1) * rows].T) for b in range(N_BANDS)
+    ]
+    return tok_sets, offs, flat, bands
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, n_hashes: int = 16
-) -> DataFrame:
-    """(id, _tokens) -> (id, sig array<long>) via per-seed min of xxhash64."""
-    tok = df.select(id_col, F.explode("_tokens").alias("tok"))
-    seeds = F.array(*[F.lit(i) for i in range(n_hashes)])
-    hashed = tok.select(
-        id_col,
-        F.explode(seeds).alias("seed"),
-        F.col("tok"),
-    ).withColumn("h", F.xxhash64(F.concat(F.col("seed").cast("string"), F.lit("\x1f"), "tok")))
-    return (
-        hashed.groupBy(id_col, "seed")
-        .agg(F.min("h").alias("mh"))
-        .groupBy(id_col)
-        .agg(F.array_sort(F.collect_list(F.struct("seed", "mh"))).alias("s"))
-        .withColumn("sig", F.expr("transform(s, x -> x.mh)"))
-        .drop("s")
+def _band_keys(batches):
+    """``mapInPandas`` body of the distributed tier: the kernel per batch, one
+    row per form with its sorted tokens and one binary column per band (the
+    raw bytes of the band's uint64 values, an exact key)."""
+    for pdf in batches:
+        texts = pdf["text"].tolist()
+        tok_sets, _, _, bands = _minhash_bands(texts)
+        cols = {"text": texts, "tokens": [sorted(s) for s in tok_sets]}
+        for col, keys in zip(_BAND_COLS, bands):
+            raw, w = keys.tobytes(), keys.shape[1] * 8
+            cols[col] = [raw[i * w : (i + 1) * w] for i in range(len(texts))]
+        yield pd.DataFrame(cols)
+
+
+def lsh_candidate_pairs(keyed: DataFrame) -> DataFrame:
+    """(text, b0..b3) -> candidate (id_a, id_b), id_a < id_b: forms that share
+    an exact band key in a bucket of at most ``MAX_BUCKET`` forms."""
+    banded = keyed.select(
+        F.col("text").alias("id"),
+        F.posexplode(F.array(*_BAND_COLS)).alias("band", "key"),
     )
-
-
-def lsh_candidate_pairs(
-    sigs: DataFrame,
-    id_col: str,
-    n_bands: int = 4,
-    max_bucket: int = 256,
-    n_hashes: int = 16,
-) -> DataFrame:
-    """Band the signatures and self-join within buckets -> (id_a, id_b).
-
-    ``n_hashes`` must match the signature length (callers pass it through);
-    a mismatch would silently mis-band via null ``element_at`` reads."""
-    if n_hashes % n_bands != 0:
-        raise ValueError("n_hashes (%d) must be divisible by n_bands (%d)" % (n_hashes, n_bands))
-    rows = n_hashes // n_bands
-    banded = sigs.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.concat_ws(
-                            ",", *[F.element_at("sig", b * rows + r + 1) for r in range(rows)]
-                        )
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band", "bhash"),
-    )
-    # cap degenerate buckets (skew guard): drop buckets larger than max_bucket
     sized = banded.withColumn(
-        "bucket_n", F.count("*").over(Window.partitionBy("band", "bhash"))
-    ).filter(F.col("bucket_n") <= max_bucket)
-    a = sized.select("band", "bhash", F.col("id").alias("id_a"))
-    b = sized.select("band", "bhash", F.col("id").alias("id_b"))
+        "bucket_n", F.count("*").over(Window.partitionBy("band", "key"))
+    ).filter(F.col("bucket_n") <= MAX_BUCKET)
+    a = sized.select("band", "key", F.col("id").alias("id_a"))
+    b = sized.select("band", "key", F.col("id").alias("id_b"))
     return (
-        a.join(b, ["band", "bhash"])
+        a.join(b, ["band", "key"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
     )
 
 
-def verify_jaccard(
-    pairs: DataFrame, toks: DataFrame, id_col: str, threshold: float = 0.9
-) -> DataFrame:
-    """Exact token Jaccard filter over candidate pairs."""
-    ta = toks.select(F.col(id_col).alias("id_a"), F.col("_tokens").alias("t_a"))
-    tb = toks.select(F.col(id_col).alias("id_b"), F.col("_tokens").alias("t_b"))
+def verify_jaccard(pairs: DataFrame, keyed: DataFrame) -> DataFrame:
+    """Exact token-set Jaccard >= ``JACCARD_THRESHOLD`` over candidate pairs;
+    a pair of token-less forms (union 0) is dropped."""
+    ta = keyed.select(F.col("text").alias("id_a"), F.col("tokens").alias("t_a"))
+    tb = keyed.select(F.col("text").alias("id_b"), F.col("tokens").alias("t_b"))
+    inter = F.size(F.array_intersect("t_a", "t_b"))
+    union = F.size(F.array_union("t_a", "t_b"))
     return (
         pairs.join(ta, "id_a")
         .join(tb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("t_a", "t_b"))
-            / F.size(F.array_union("t_a", "t_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.when(union > 0, inter / union) >= JACCARD_THRESHOLD)
         .select("id_a", "id_b")
     )
 
@@ -220,77 +242,19 @@ def connected_components(edges: DataFrame, max_iter: int = 30) -> DataFrame:
     return _resolve(mapping)
 
 
-def _lsh_cc_driver(
-    texts: list[str],
-    jaccard_threshold: float,
-    n_hashes: int,
-    n_bands: int,
-    max_bucket: int = 256,
-) -> list[tuple[str, str]]:
-    """Single-process MinHash-LSH + union-find for dimension-sized form sets.
-
-    Same candidate->verify->cluster semantics as the distributed path; the
-    minhash permutations are md5-derived here (deterministic) while the
-    distributed path uses xxhash64 — band assignment can differ between the
-    two, but membership of a >= threshold Jaccard cluster is decided by the
-    exact verify step either way.  Exists because the distributed chain is
-    ~8 small jobs whose fixed scheduling latency dominates at dimension scale
-    (the round-1 scaling bottleneck); here it is one collect."""
-    import hashlib
-
-    import numpy as np
-
-    tok_sets = []
-    for t in texts:
-        tok_sets.append(frozenset((t or "").lower().split()))
-    rows = n_hashes // n_bands
-
-    # vectorized minhash: one md5 per distinct token, then n_hashes
-    # multiply-add permutations (md5-derived constants) applied in numpy —
-    # the per-(seed, token) hashing loop was itself a fixed driver cost
-    vocab: dict[str, int] = {}
-    for s in tok_sets:
-        for tok in s:
-            if tok not in vocab:
-                vocab[tok] = len(vocab)
-    base = np.empty(max(len(vocab), 1), dtype=np.uint64)
-    for tok, i in vocab.items():
-        base[i] = int.from_bytes(hashlib.md5(tok.encode()).digest()[:8], "big")
-    consts = [
-        hashlib.md5(b"perm-%d" % s).digest() for s in range(n_hashes)
-    ]
-    A = np.array(
-        [int.from_bytes(c[:8], "big") | 1 for c in consts], dtype=np.uint64
-    )
-    B = np.array([int.from_bytes(c[8:16], "big") for c in consts], dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        mixed = A[:, None] * base[None, :] + B[:, None]  # (n_hashes, V), mod 2^64
-
-    # fully vectorized signatures: CSR layout of token indices (form i owns
-    # flat[offs[i]:offs[i + 1]]) + one minimum.reduceat per hash row (the
-    # per-form numpy-call loop was the residual fixed driver cost at
-    # dimension scale).  The verify below reads the same layout.
+def _lsh_cc_driver(texts: list[str]) -> list[tuple[str, str]]:
+    """Driver tier: the kernel over all forms at once, numpy bucket grouping
+    and pair expansion, one vectorized exact verify and a union-find.
+    Exists because the distributed tier's fixed job latency dominates at
+    dimension scale; here it is one collect."""
+    _, offs, flat, bands = _minhash_bands(texts)
     n = len(texts)
-    sizes = np.fromiter((len(s) for s in tok_sets), dtype=np.int64, count=n)
-    offs = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(sizes, out=offs[1:])
-    flat = np.fromiter(
-        (vocab[t] for s in tok_sets for t in s), dtype=np.int64, count=int(offs[-1])
-    )
-    nonempty = np.flatnonzero(sizes)
-    sigs = np.zeros((n_hashes, n), dtype=np.uint64)
-    if nonempty.size:
-        sigs[:, nonempty] = np.minimum.reduceat(
-            mixed[:, flat], offs[nonempty], axis=1
-        )
+    sizes = np.diff(offs)
 
-    # vectorized banding: group forms by exact band signature via np.unique
-    # over a structured view (exact keys — no mixing collisions; candidate
-    # groups are what the tuple-keyed dict produced, without the Python loop)
+    # group forms by exact band key via np.unique over a structured view
     def band_groups():
-        for b in range(n_bands):
-            band = np.ascontiguousarray(sigs[b * rows : (b + 1) * rows, :].T)
-            view = band.view([("", band.dtype)] * rows).reshape(n)
+        for band in bands:
+            view = band.view([("", band.dtype)] * band.shape[1]).reshape(n)
             _, inv = np.unique(view, return_inverse=True)
             order = np.argsort(inv, kind="stable")
             bounds = np.flatnonzero(np.diff(inv[order])) + 1
@@ -314,7 +278,7 @@ def _lsh_cc_driver(
     by_size: dict[int, list] = {}
     for members in band_groups():
         k = len(members)
-        if k < 2 or k > max_bucket:  # hot-bucket cap
+        if k < 2 or k > MAX_BUCKET:  # hot-bucket cap
             continue
         by_size.setdefault(k, []).append(np.sort(members))
     pair_chunks = []
@@ -340,7 +304,7 @@ def _lsh_cc_driver(
     # |A∪B| = |A|+|B|-|A∩B|, and one float division decides — only the few
     # surviving pairs reach the Python union-find.  Pairs are chunked so one
     # chunk expands to at most ~4M (pair, token) lookups.
-    n_vocab = max(len(vocab), 1)
+    n_vocab = int(flat.max(initial=0)) + 1
     keys = np.sort(np.repeat(np.arange(n, dtype=np.int64), sizes) * n_vocab + flat)
     step = max(1, 4_000_000 // max(int(sizes.max(initial=0)), 1))
     for lo_i in range(0, packed.size, step):
@@ -356,7 +320,7 @@ def _lsh_cc_driver(
         hit = keys[idx] == q
         inter = np.bincount(pair[hit], minlength=chunk.size)
         union = la + sizes[pb] - inter
-        ok = (union > 0) & ((inter / np.maximum(union, 1)) >= jaccard_threshold)
+        ok = (union > 0) & ((inter / np.maximum(union, 1)) >= JACCARD_THRESHOLD)
         for a, b in zip(pa[ok].tolist(), pb[ok].tolist()):
             unite(a, b)
     out = []
@@ -368,12 +332,7 @@ def _lsh_cc_driver(
 
 
 def canonicalize_surface_forms(
-    df: DataFrame,
-    text_col: str = "obj",
-    jaccard_threshold: float = 0.9,
-    n_hashes: int = 16,
-    n_bands: int = 4,
-    driver_threshold: int = 200_000,
+    df: DataFrame, text_col: str = "obj", driver_threshold: int = 200_000
 ) -> DataFrame:
     """Return (text, canonical_text) — the LSH+CC rewrite table for a column
     of surface forms, containing **only non-identity rewrites**
@@ -383,27 +342,25 @@ def canonicalize_surface_forms(
     one row per *rewritten* form, not per distinct form — so broadcasting it
     stays viable at web scale (ADVICE r1).
 
-    Form sets up to ``driver_threshold`` distinct values run the
-    single-process LSH+union-find fast path (one distinct + collect instead
-    of the ~8-job distributed chain — the chain's fixed scheduling latency
-    was the round-1 scaling bottleneck); larger sets take the fully
-    distributed path."""
+    Form sets up to ``driver_threshold`` distinct values run the driver tier
+    (one distinct + collect instead of the distributed tier's chain of jobs,
+    whose fixed scheduling latency dominates at dimension scale); larger
+    sets run the distributed tier.  Both give the same table."""
     spark = df.sparkSession
     forms = df.select(F.col(text_col).alias("text")).distinct().cache()
     # one job instead of count + collect: a (threshold+1)-limited collect both
     # sizes the form set and, when it fits, IS the form set (the cache serves
-    # the distributed path otherwise)
+    # the distributed tier otherwise)
     head = forms.limit(driver_threshold + 1).collect()
     if len(head) <= driver_threshold:
-        pairs = _lsh_cc_driver(
-            [r["text"] for r in head],
-            jaccard_threshold, n_hashes, n_bands,
-        )
+        pairs = _lsh_cc_driver([r["text"] for r in head])
         return spark.createDataFrame(pairs, "text string, canonical_text string")
-    toks = tokenize_col(forms, "text").withColumn("id", F.col("text"))
-    sigs = minhash_signatures(toks, "id", n_hashes)
-    pairs = lsh_candidate_pairs(sigs, "id", n_bands, n_hashes=n_hashes)
-    verified = verify_jaccard(pairs, toks, "id", jaccard_threshold).cache()
+    keyed = forms.mapInPandas(
+        _band_keys,
+        "text string, tokens array<string>, "
+        + ", ".join("%s binary" % c for c in _BAND_COLS),
+    ).cache()
+    verified = verify_jaccard(lsh_candidate_pairs(keyed), keyed).cache()
     if not verified.limit(1).count():
         # no near-duplicates at all: empty rewrite table, skip the CC loop
         return spark.createDataFrame([], "text string, canonical_text string")

@@ -60,7 +60,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .metrics import batch_timer
-from .relations import POS_TEMPLATES
+from .relations import POS_TEMPLATES, template_anchor_len
 
 DEFAULT_TOPK = 5
 
@@ -247,12 +247,9 @@ def template_start_index(relation: str, mode: str = "tokens") -> int:
     "none" (no masking)."""
     if mode == "none":
         return 0
-    tpl = POS_TEMPLATES.get(relation, ("", ""))[1]
-    if not tpl:
-        return 0
     if mode == "chars":
-        return len(tpl)
-    return len(tpl.split())
+        return len(POS_TEMPLATES.get(relation, ("", ""))[1])
+    return template_anchor_len(relation)
 
 
 def probase_concepts(

@@ -47,13 +47,9 @@ def pairs_from_pages(pages: DataFrame) -> DataFrame:
 
 def template_table(spark) -> DataFrame:
     """Literal 21-row relation/template dimension (broadcast everywhere)."""
-    rows = [
-        (rel, PROMPTS[rel][0], POS_TEMPLATES[rel][0],
-         len(POS_TEMPLATES[rel][1].split()) if POS_TEMPLATES[rel][1] else 0)
-        for rel in RELATIONS
-    ]
+    rows = [(rel, PROMPTS[rel][0], POS_TEMPLATES[rel][0]) for rel in RELATIONS]
     return spark.createDataFrame(
-        rows, "relation string, prompt_suffix string, anchor string, anchor_len int"
+        rows, "relation string, prompt_suffix string, anchor string"
     )
 
 

@@ -41,7 +41,12 @@ from .graphs import (
     normalize_pattern,
     sort_patterns,
 )
-from .relations import IGNORE_POS_TAGS, OPTIONAL_POS_TAGS, POS_TEMPLATES
+from .relations import (
+    IGNORE_POS_TAGS,
+    OPTIONAL_POS_TAGS,
+    POS_TEMPLATES,
+    template_anchor_len,
+)
 
 # vertices outside the template prefix with these POS classes are dropped by
 # skeletonization (pattern_miner.py:107-160 via :461)
@@ -49,10 +54,7 @@ _SKEL_DROP = OPTIONAL_POS_TAGS | IGNORE_POS_TAGS
 
 
 def anchor_lens() -> dict[str, int]:
-    return {
-        rel: len(tpl[1].split()) if tpl[1] else 0
-        for rel, tpl in POS_TEMPLATES.items()
-    }
+    return {rel: template_anchor_len(rel) for rel in POS_TEMPLATES}
 
 
 def enumerate_anchored(

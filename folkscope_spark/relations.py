@@ -67,6 +67,12 @@ POS_TEMPLATES: dict[str, tuple[str, str]] = {
 
 RELATIONS: tuple[str, ...] = tuple(PROMPTS)
 
+
+def template_anchor_len(relation: str) -> int:
+    """Token length of ``relation``'s POS-template anchor (0 when it has none
+    or the relation is unknown)."""
+    return len(POS_TEMPLATES.get(relation, ("", ""))[1].split())
+
 # Relations the reference cannot mine: "propertyOf" (typo mismatch drops its
 # rows at generation_parser.py:129-130) and "open" (empty template skipped at
 # pattern_filter.py:56-60).  With REFERENCE_PARITY=True the pipeline reproduces

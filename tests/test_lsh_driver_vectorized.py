@@ -2,12 +2,11 @@
 
 `_lsh_cc_driver`'s exact-Jaccard verify is one vectorized count (sorted
 form*V+token keys, searchsorted lookups, bincount per pair) for any
-vocabulary size.  It once had two paths, a bitmask for up to 4096 distinct
-tokens and a frozenset loop above, which the test names still recall.
-These tests pin the clusters against a brute-force reference on small and
-large (>4096 token) vocabularies, including at the exact threshold boundary
-where float semantics matter (inter/union >= threshold is computed as a
-division, never as inter >= threshold*union, which rounds differently).
+vocabulary size.  These tests pin the clusters against a brute-force
+reference on small and large (>4096 token) vocabularies, including at the
+exact threshold boundary where float semantics matter (inter/union >=
+threshold is computed as a division, never as inter >= threshold*union,
+which rounds differently).
 """
 
 from __future__ import annotations
@@ -47,7 +46,7 @@ def test_exact_threshold_boundary_small_vocab():
     a = " ".join(base + ["x"])       # 10 tokens
     b = " ".join(base)               # 9 tokens, union 10, inter 9 -> 0.9
     texts = [a, b, "unrelated words entirely different"]
-    got = set(_lsh_cc_driver(texts, 0.9, 16, 4))
+    got = set(_lsh_cc_driver(texts))
     want = _brute_clusters(texts, 0.9)
     # LSH banding can only MISS pairs, never invent them; on this corpus
     # with 16 hashes / 4 bands a 0.9-similar pair is found
@@ -55,7 +54,7 @@ def test_exact_threshold_boundary_small_vocab():
     assert (max(a, b), min(a, b)) in got
 
 
-def test_mask_and_fallback_paths_agree():
+def test_random_small_vocab_matches_brute_force():
     import random
 
     random.seed(13)
@@ -64,23 +63,16 @@ def test_mask_and_fallback_paths_agree():
         " ".join(random.choices(vocab_small, k=random.randint(3, 6)))
         for _ in range(400)
     })
-    small = set(_lsh_cc_driver(texts, 0.9, 16, 4))
-
-    # force the frozenset fallback by inflating the vocabulary past 4096
-    # with per-text unique suffix tokens would change the texts; instead
-    # re-run the same texts through the fallback by temporarily bounding
-    # the mask width via monkeypatching numpy is brittle — the agreed
-    # contract is vs the brute-force reference:
+    small = set(_lsh_cc_driver(texts))
     assert small == _brute_clusters(texts, 0.9)
 
 
-def test_fallback_path_large_vocab():
-    # >4096 distinct tokens routes to the frozenset path; duplicates with
-    # >=0.9 jaccard must still cluster
+def test_large_vocab_clusters_only_above_threshold():
+    # >4096 distinct tokens; duplicates with >=0.9 jaccard must still cluster
     texts = ["u%d v%d w%d" % (i, i, i) for i in range(1500)]
     texts += ["a b c d e f g h i j", "a b c d e f g h i k",
               "a b c d e f g h i j extra"]
-    out = dict(_lsh_cc_driver(list(dict.fromkeys(texts)), 0.9, 16, 4))
+    out = dict(_lsh_cc_driver(list(dict.fromkeys(texts))))
     # "…i j" vs "…i k": inter 9, union 11 -> 0.818 < 0.9 (no edge);
     # "…i j" vs "…i j extra": inter 10, union 11 -> 0.909 >= 0.9 (edge)
     assert out.get("a b c d e f g h i j extra") == "a b c d e f g h i j"

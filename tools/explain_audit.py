@@ -234,7 +234,7 @@ def main():
             f.write(f"## {name}\n\n")
             for n in notes:
                 f.write(f"- {n}\n")
-            f.write("\n```\n" + p.strip()[:4000] + "\n```\n\n")
+            f.write("\n```\n" + p.strip() + "\n```\n\n")
 
     print("FAILURES:", failures if failures else "none")
     return 1 if failures else 0
