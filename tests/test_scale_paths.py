@@ -143,6 +143,99 @@ def test_canonicalize_tiers_emit_same_rewrite_table(spark):
     assert len(driver) > 950
 
 
+def _closure_corpus():
+    """~400 seeded random forms and a 31-form chain.  Short forms: 1-3 tokens
+    of a 12-word vocabulary in random case and spacing (many share a token
+    set).  Long forms: one of 20 ten-token stems with up to two tokens
+    dropped and two added (J from 0.8 to 1).  Chain: ten tokens plus 0..30
+    extra ones, so each link has J >= 10/11 and the ends J = 10/40."""
+    import random
+
+    rng = random.Random(0)
+    words = ["w%d" % i for i in range(12)]
+    forms = set()
+    while len(forms) < 200:
+        toks = rng.sample(words, rng.randint(1, 3))
+        toks = [t.upper() if rng.random() < 0.3 else t for t in toks]
+        forms.add(rng.choice([" ", "  ", "\t"]).join(toks))
+    while len(forms) < 400:
+        s = rng.randrange(20)
+        toks = ["s%dt%d" % (s, j) for j in range(10)]
+        for _ in range(rng.randint(0, 2)):
+            toks.pop(rng.randrange(len(toks)))
+        toks += ["s%dx%d" % (s, rng.randrange(4)) for _ in range(rng.randint(0, 2))]
+        rng.shuffle(toks)
+        forms.add(" ".join(toks))
+    base = " ".join("c%d" % j for j in range(10))
+    chain = [base + "".join(" x%d" % j for j in range(i)) for i in range(31)]
+    return sorted(forms) + chain, chain
+
+
+def test_canonicalize_tiers_match_brute_force_closure(spark):
+    """Both tiers equal a brute-force all-pairs exact-Jaccard union-find with
+    the lexicographic-min text as root.  The hashes are fixed and this
+    corpus is chosen so that LSH banding misses no qualifying pair (asserted
+    below), so the table is the exact closure, chain included."""
+    from folkscope_spark.canonicalize import _minhash_bands, canonicalize_surface_forms
+
+    forms, chain = _closure_corpus()
+    sets = [frozenset(t.lower().split()) for t in forms]
+    bands = _minhash_bands(forms)[-1]
+    parent = list(range(len(forms)))
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    qualifying = 0
+    for a in range(len(forms)):
+        for b in range(a + 1, len(forms)):
+            u = len(sets[a] | sets[b])
+            if u and len(sets[a] & sets[b]) / u >= 0.9:
+                qualifying += 1
+                assert any((k[a] == k[b]).all() for k in bands), (forms[a], forms[b])
+                ra, rb = find(a), find(b)
+                if ra != rb:
+                    lo, hi = (ra, rb) if forms[ra] < forms[rb] else (rb, ra)
+                    parent[hi] = lo
+    want = {(t, forms[find(i)]) for i, t in enumerate(forms) if forms[find(i)] != t}
+    assert qualifying > 200
+    # the chain closes only transitively: its ends are far apart
+    assert len(sets[-31] & sets[-1]) / len(sets[-31] | sets[-1]) < 0.9
+    assert {(t, chain[0]) for t in chain[1:]} <= want
+
+    df = spark.createDataFrame([(t,) for t in forms], "obj string")
+    for kw in ({}, {"driver_threshold": 0}):
+        got = {
+            (r["text"], r["canonical_text"])
+            for r in canonicalize_surface_forms(df, "obj", **kw).collect()
+        }
+        assert got == want, kw
+
+
+def test_canonicalize_hot_bucket_cap_on_both_tiers(spark):
+    """Distinct case spellings of one token set share every band key: 200
+    of them fit one bucket (199 rewrites to the min spelling), 300 exceed
+    ``MAX_BUCKET`` = 256 in every band and are never compared (0 rewrites),
+    on both tiers."""
+    from folkscope_spark.canonicalize import canonicalize_surface_forms
+
+    text = "red apple pie"
+    letters = [j for j, c in enumerate(text) if c != " "]
+    spellings = []
+    for i in range(300):  # bit b of i upper-cases the b-th letter
+        up = {j for b, j in enumerate(letters) if i >> b & 1}
+        spellings.append("".join(c.upper() if j in up else c for j, c in enumerate(text)))
+    assert len(set(spellings)) == 300
+    for n, want_n in ((200, 199), (300, 0)):
+        df = spark.createDataFrame([(t,) for t in spellings[:n]], "obj string")
+        for kw in ({}, {"driver_threshold": 0}):
+            got = canonicalize_surface_forms(df, "obj", **kw).collect()
+            assert len(got) == want_n, (n, kw)
+            assert {r["canonical_text"] for r in got} <= {min(spellings[:n])}
+
+
 def test_pr_curve_binned_matches_exact_at_bin_edges(spark):
     """With scores exactly on bin edges the binned sweep reproduces the exact
     per-row sweep's cumulative counts."""
