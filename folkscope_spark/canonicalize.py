@@ -1,32 +1,38 @@
-"""Surface-form canonicalization: MinHash-LSH + connected components (O7).
+"""Surface-form canonicalization: MinHash-LSH + one union-find closure (O7).
 
 north_rule requirement: cluster near-duplicate surface forms and resolve each
 cluster to one canonical representative before materializing triples.
 
-One MinHash-LSH definition, run by two execution tiers.  The definition is
-:func:`_minhash_bands`:
+One definition, run by two execution tiers:
 
 * tokens: the set of ``str.lower().split()`` (Python's Unicode whitespace,
   so leading/trailing spaces, tabs and NBSP never make a token);
-* MinHash: one md5 per distinct token, then ``N_HASHES`` md5-derived
-  multiply-add permutations mod 2^64, minimized per form in numpy;
+* MinHash (:func:`_minhash_bands`): one md5 per distinct token, then
+  ``N_HASHES`` md5-derived multiply-add permutations mod 2^64, minimized per
+  form in numpy;
 * LSH bands: ``N_BANDS`` exact keys of ``N_HASHES // N_BANDS`` signature
   values each, never re-hashed, so a bucket holds exactly the forms whose
   band agrees.  Buckets above ``MAX_BUCKET`` forms are dropped (a skew guard
-  against the join blowup of a degenerate band);
-* verification: exact token-set Jaccard >= ``JACCARD_THRESHOLD``; a form
-  with no tokens matches nothing;
-* clusters: verified pairs closed transitively, canonical member = the
-  lexicographic-min text of each cluster.
+  against the k^2 pair blowup of a degenerate band);
+* verification (:func:`_verified_pairs`): the pairs within each bucket,
+  kept at exact token-set Jaccard >= ``JACCARD_THRESHOLD``; a form with no
+  tokens matches nothing;
+* closure (:func:`_union_find`): verified pairs closed transitively,
+  canonical member = the lexicographic-min text of each cluster.
 
 Both tiers emit the same rewrite table; ``driver_threshold`` picks only
-where it runs.  The driver tier collects the distinct forms, runs the kernel
-once and closes pairs with a union-find.  The distributed tier runs the
-kernel in one ``mapInPandas``, finds candidate pairs by a self-equi-join on
-(band, key) -- never an all-pairs crossJoin -- verifies them with
-``array_intersect``/``array_union`` and closes them with
-:func:`connected_components`.  Deterministic end to end: hash constants are
-fixed.
+where it runs.  The driver tier collects the distinct forms and runs the
+kernel, the verify and the closure once over all of them.  The distributed
+tier runs the kernel in one ``mapInPandas``, builds the buckets with one
+window count and one ``groupBy`` on (band, key), and verifies them in a
+second ``mapInPandas`` that emits only each batch's spanning forest (every
+clustered member -> its cluster minimum).  The driver collects that forest
+and closes it with the same union-find: no iterative global pass.  Each
+form sits in ``N_BANDS`` buckets, so the forest holds at most ``N_BANDS``
+edges per clustered form, the size class of the rewrite table that
+``materialize.build_triples`` broadcasts; the collect is capped by
+``spark.driver.maxResultSize`` and raises when it exceeds it.
+Deterministic end to end: hash constants are fixed.
 """
 
 from __future__ import annotations
@@ -48,27 +54,15 @@ _A = np.array([int.from_bytes(c[:8], "big") | 1 for c in _PERMS], dtype=np.uint6
 _B = np.array([int.from_bytes(c[8:16], "big") for c in _PERMS], dtype=np.uint64)
 
 
-def _minhash_bands(texts: list[str]):
-    """The MinHash-LSH kernel both tiers run.
-
-    Returns ``(tok_sets, offs, flat, bands)``: each text's token set, their
-    CSR layout as token ids (text i owns ``flat[offs[i]:offs[i + 1]]``) and
-    ``N_BANDS`` contiguous ``(len(texts), N_HASHES // N_BANDS)`` uint64
-    arrays of exact band keys.  A text with no tokens gets all-zero keys."""
+def _token_csr(texts: list[str]):
+    """Each text's token set as token ids in CSR layout: ``(offs, flat,
+    vocab)``, text i owning ``flat[offs[i]:offs[i + 1]]``."""
     tok_sets = [frozenset((t or "").lower().split()) for t in texts]
-    # one md5 per distinct token, then the permutations applied in numpy
     vocab: dict[str, int] = {}
     for s in tok_sets:
         for tok in s:
             if tok not in vocab:
                 vocab[tok] = len(vocab)
-    base = np.empty(max(len(vocab), 1), dtype=np.uint64)
-    for tok, i in vocab.items():
-        base[i] = int.from_bytes(hashlib.md5(tok.encode()).digest()[:8], "big")
-    with np.errstate(over="ignore"):
-        mixed = _A[:, None] * base[None, :] + _B[:, None]  # (N_HASHES, V), mod 2^64
-
-    # one minimum.reduceat per hash row over the CSR layout
     n = len(texts)
     sizes = np.fromiter((len(s) for s in tok_sets), dtype=np.int64, count=n)
     offs = np.zeros(n + 1, dtype=np.int64)
@@ -76,8 +70,26 @@ def _minhash_bands(texts: list[str]):
     flat = np.fromiter(
         (vocab[t] for s in tok_sets for t in s), dtype=np.int64, count=int(offs[-1])
     )
-    nonempty = np.flatnonzero(sizes)
-    sigs = np.zeros((N_HASHES, n), dtype=np.uint64)
+    return offs, flat, vocab
+
+
+def _minhash_bands(texts: list[str]):
+    """The MinHash-LSH kernel both tiers run.
+
+    Returns ``(offs, flat, bands)``: the texts' :func:`_token_csr` layout and
+    ``N_BANDS`` contiguous ``(len(texts), N_HASHES // N_BANDS)`` uint64
+    arrays of exact band keys.  A text with no tokens gets all-zero keys."""
+    offs, flat, vocab = _token_csr(texts)
+    # one md5 per distinct token, then the permutations applied in numpy
+    base = np.empty(max(len(vocab), 1), dtype=np.uint64)
+    for tok, i in vocab.items():
+        base[i] = int.from_bytes(hashlib.md5(tok.encode()).digest()[:8], "big")
+    with np.errstate(over="ignore"):
+        mixed = _A[:, None] * base[None, :] + _B[:, None]  # (N_HASHES, V), mod 2^64
+
+    # one minimum.reduceat per hash row over the CSR layout
+    nonempty = np.flatnonzero(np.diff(offs))
+    sigs = np.zeros((N_HASHES, len(texts)), dtype=np.uint64)
     if nonempty.size:
         sigs[:, nonempty] = np.minimum.reduceat(
             mixed[:, flat], offs[nonempty], axis=1
@@ -86,204 +98,29 @@ def _minhash_bands(texts: list[str]):
     bands = [
         np.ascontiguousarray(sigs[b * rows : (b + 1) * rows].T) for b in range(N_BANDS)
     ]
-    return tok_sets, offs, flat, bands
+    return offs, flat, bands
 
 
-def _band_keys(batches):
-    """``mapInPandas`` body of the distributed tier: the kernel per batch, one
-    row per form with its sorted tokens and one binary column per band (the
-    raw bytes of the band's uint64 values, an exact key)."""
-    for pdf in batches:
-        texts = pdf["text"].tolist()
-        tok_sets, _, _, bands = _minhash_bands(texts)
-        cols = {"text": texts, "tokens": [sorted(s) for s in tok_sets]}
-        for col, keys in zip(_BAND_COLS, bands):
-            raw, w = keys.tobytes(), keys.shape[1] * 8
-            cols[col] = [raw[i * w : (i + 1) * w] for i in range(len(texts))]
-        yield pd.DataFrame(cols)
-
-
-def lsh_candidate_pairs(keyed: DataFrame) -> DataFrame:
-    """(text, b0..b3) -> candidate (id_a, id_b), id_a < id_b: forms that share
-    an exact band key in a bucket of at most ``MAX_BUCKET`` forms."""
-    banded = keyed.select(
-        F.col("text").alias("id"),
-        F.posexplode(F.array(*_BAND_COLS)).alias("band", "key"),
-    )
-    sized = banded.withColumn(
-        "bucket_n", F.count("*").over(Window.partitionBy("band", "key"))
-    ).filter(F.col("bucket_n") <= MAX_BUCKET)
-    a = sized.select("band", "key", F.col("id").alias("id_a"))
-    b = sized.select("band", "key", F.col("id").alias("id_b"))
-    return (
-        a.join(b, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
-def verify_jaccard(pairs: DataFrame, keyed: DataFrame) -> DataFrame:
-    """Exact token-set Jaccard >= ``JACCARD_THRESHOLD`` over candidate pairs;
-    a pair of token-less forms (union 0) is dropped."""
-    ta = keyed.select(F.col("text").alias("id_a"), F.col("tokens").alias("t_a"))
-    tb = keyed.select(F.col("text").alias("id_b"), F.col("tokens").alias("t_b"))
-    inter = F.size(F.array_intersect("t_a", "t_b"))
-    union = F.size(F.array_union("t_a", "t_b"))
-    return (
-        pairs.join(ta, "id_a")
-        .join(tb, "id_b")
-        .filter(F.when(union > 0, inter / union) >= JACCARD_THRESHOLD)
-        .select("id_a", "id_b")
-    )
-
-
-def connected_components(edges: DataFrame, max_iter: int = 30) -> DataFrame:
-    """Connected components over an (id_a, id_b) edge list -> (id, comp) with
-    comp = min reachable id.  Its caller is the distributed path of
-    :func:`canonicalize_surface_forms` (form sets above its
-    ``driver_threshold``), whose edge list is not bounded by driver memory,
-    so the edges are never collected.
-
-    The algorithm is **min-label star contraction with edge rewriting**
-    (the property the round-1 version lacked): each round every current node
-    adopts the minimum of its neighborhood (including itself), the edge list
-    is rewritten through the new labels (contracting each star to its
-    representative), and the id->representative mapping is composed with the
-    round's labels.  Because whole neighborhoods collapse into their minima
-    each round, long chains halve in length per round — O(log n) rounds, not
-    O(diameter) — and convergence is exact: the loop ends when the contracted
-    edge list is empty.  Hitting ``max_iter`` with edges left raises instead
-    of silently splitting clusters (ADVICE r1)."""
-    edges = edges.cache()
-    # size the loop's shuffles to the data, not the session default
-    n_part = max(4, edges.count() // 500_000)
-    e = (
-        edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .union(edges.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
-        .distinct()
-        .repartition(n_part, "u")
-        .localCheckpoint(eager=True)
-    )
-    # mapping: original id -> current representative (composed every round)
-    mapping = (
-        e.select(F.col("u").alias("id")).distinct()
-        .withColumn("comp", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    def _resolve(m: DataFrame) -> DataFrame:
-        # contraction can finish while mapping rows still hold multi-hop
-        # pointer chains (a node whose representative was itself contracted
-        # in a later round); halve pointers to fixpoint — chains shrink
-        # geometrically, so this is O(log n) tiny self-joins
-        for _ in range(max_iter):
-            hop = m.select(F.col("id").alias("comp"), F.col("comp").alias("comp2"))
-            nxt = (
-                m.join(hop, "comp", "left")
-                .select("id", F.coalesce("comp2", "comp").alias("comp"))
-                .localCheckpoint(eager=True)
-            )
-            moved = (
-                nxt.alias("n")
-                .join(m.alias("o"), "id")
-                .filter(F.col("n.comp") != F.col("o.comp"))
-                .limit(1)
-                .count()
-            )
-            m = nxt
-            if moved == 0:
-                return m
-        raise RuntimeError("component mapping did not resolve in %d hops" % max_iter)
-
-    for _ in range(max_iter):
-        if e.limit(1).count() == 0:
-            return _resolve(mapping)
-        # star step: node -> min(neighborhood + self)
-        labels = (
-            e.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select(F.col("u").alias("node"), F.least("mn", "u").alias("new"))
-        )
-        # compose mapping through this round's labels...
-        mapping = (
-            mapping.join(labels, mapping["comp"] == labels["node"], "left")
-            .select("id", F.coalesce("new", "comp").alias("comp"))
-        )
-        # ...then pointer-halve (comp := comp's comp): without this, a
-        # descending id chain moves the minimum one hop per round (O(n));
-        # halving makes representative chains collapse in O(log n) rounds
-        hop = mapping.select(F.col("id").alias("comp"), F.col("comp").alias("comp2"))
-        mapping = (
-            mapping.join(hop, "comp", "left")
-            .select("id", F.coalesce("comp2", "comp").alias("comp"))
-            .localCheckpoint(eager=True)
-        )
-        # contract: rewrite both edge endpoints through the halved mapping
-        # (edge endpoints are representative ids, all present in mapping.id),
-        # drop self-loops, dedupe - the graph of representatives
-        lu = mapping.select(F.col("id").alias("u"), F.col("comp").alias("nu"))
-        lv = mapping.select(F.col("id").alias("v"), F.col("comp").alias("nv"))
-        e = (
-            e.join(lu, "u")
-            .join(lv, "v")
-            .select(F.col("nu").alias("u"), F.col("nv").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-        )
-        # keep the contracted graph symmetric for the next star step
-        e = (
-            e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-    if e.limit(1).count() != 0:
-        raise RuntimeError(
-            "connected_components did not converge in %d rounds" % max_iter
-        )
-    return _resolve(mapping)
-
-
-def _lsh_cc_driver(texts: list[str]) -> list[tuple[str, str]]:
-    """Driver tier: the kernel over all forms at once, numpy bucket grouping
-    and pair expansion, one vectorized exact verify and a union-find.
-    Exists because the distributed tier's fixed job latency dominates at
-    dimension scale; here it is one collect."""
-    _, offs, flat, bands = _minhash_bands(texts)
-    n = len(texts)
+def _verified_pairs(offs, flat, groups) -> tuple[list[int], list[int]]:
+    """Candidate pairs within each group of 2..``MAX_BUCKET`` form ids,
+    kept at exact token-set Jaccard >= ``JACCARD_THRESHOLD``.  ``offs`` and
+    ``flat`` are the forms' :func:`_token_csr` layout.  Returns the unique
+    verified pairs as two index lists, ``a[i] < b[i]``."""
+    n = len(offs) - 1
     sizes = np.diff(offs)
-
-    # group forms by exact band key via np.unique over a structured view
-    def band_groups():
-        for band in bands:
-            view = band.view([("", band.dtype)] * band.shape[1]).reshape(n)
-            _, inv = np.unique(view, return_inverse=True)
-            order = np.argsort(inv, kind="stable")
-            bounds = np.flatnonzero(np.diff(inv[order])) + 1
-            yield from np.split(order, bounds)
-
-    parent = list(range(len(texts)))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    # candidate pairs: bucket pair expansion in numpy, batched by bucket size
-    # (one triu index template per distinct size instead of one allocation
-    # per bucket), deduped once with np.unique over packed (a * n + b) keys —
-    # the per-pair Python loop with a seen-set was the dominant driver cost
-    # (profiled ~2s / 1.1M raw pairs at 40k forms).  The verified union-find
-    # is unchanged: its min-text root invariant makes the result independent
-    # of pair order.
+    # pair expansion in numpy, batched by bucket size (one triu index
+    # template per distinct size instead of one allocation per bucket),
+    # deduped once with np.unique over packed (a * n + b) keys -- the
+    # per-pair Python loop with a seen-set was the dominant driver cost
+    # (profiled ~2s / 1.1M raw pairs at 40k forms)
     by_size: dict[int, list] = {}
-    for members in band_groups():
+    for members in groups:
         k = len(members)
-        if k < 2 or k > MAX_BUCKET:  # hot-bucket cap
-            continue
-        by_size.setdefault(k, []).append(np.sort(members))
+        if 2 <= k <= MAX_BUCKET:  # hot-bucket cap
+            by_size.setdefault(k, []).append(np.sort(members))
     pair_chunks = []
-    for k, groups in by_size.items():
-        mat = np.stack(groups).astype(np.int64)  # (m, k)
+    for k, grouped in by_size.items():
+        mat = np.stack(grouped).astype(np.int64)  # (m, k)
         ia, ib = np.triu_indices(k, 1)
         pair_chunks.append((mat[:, ia] * n + mat[:, ib]).ravel())
     packed = (
@@ -292,21 +129,16 @@ def _lsh_cc_driver(texts: list[str]) -> list[tuple[str, str]]:
         else np.empty(0, dtype=np.int64)
     )
 
-    def unite(a: int, b: int) -> None:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            lo, hi = (ra, rb) if texts[ra] < texts[rb] else (rb, ra)
-            parent[hi] = lo
-
     # exact-Jaccard verify over the unique candidate pairs, vectorized for
     # any vocabulary size: each of a's tokens is looked up among b's in the
     # sorted (form * V + token) keys, the hits per pair are |A∩B|,
-    # |A∪B| = |A|+|B|-|A∩B|, and one float division decides — only the few
-    # surviving pairs reach the Python union-find.  Pairs are chunked so one
-    # chunk expands to at most ~4M (pair, token) lookups.
+    # |A∪B| = |A|+|B|-|A∩B|, and one float division decides.  Pairs are
+    # chunked so one chunk expands to at most ~4M (pair, token) lookups.
     n_vocab = int(flat.max(initial=0)) + 1
     keys = np.sort(np.repeat(np.arange(n, dtype=np.int64), sizes) * n_vocab + flat)
     step = max(1, 4_000_000 // max(int(sizes.max(initial=0)), 1))
+    a: list[int] = []
+    b: list[int] = []
     for lo_i in range(0, packed.size, step):
         chunk = packed[lo_i : lo_i + step]
         pa = chunk // n
@@ -321,8 +153,29 @@ def _lsh_cc_driver(texts: list[str]) -> list[tuple[str, str]]:
         inter = np.bincount(pair[hit], minlength=chunk.size)
         union = la + sizes[pb] - inter
         ok = (union > 0) & ((inter / np.maximum(union, 1)) >= JACCARD_THRESHOLD)
-        for a, b in zip(pa[ok].tolist(), pb[ok].tolist()):
-            unite(a, b)
+        a += pa[ok].tolist()
+        b += pb[ok].tolist()
+    return a, b
+
+
+def _union_find(texts: list[str], a, b) -> list[tuple[str, str]]:
+    """Close the index pairs ``(a[i], b[i])`` over ``texts`` transitively.
+    Every root is its cluster's lexicographically smallest text, so the
+    result does not depend on pair order.  Returns the non-identity
+    ``(text, canonical_text)`` rewrites."""
+    parent = list(range(len(texts)))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for x, y in zip(a, b):
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            lo, hi = (rx, ry) if texts[rx] < texts[ry] else (ry, rx)
+            parent[hi] = lo
     out = []
     for i, t in enumerate(texts):
         canon = texts[find(i)]
@@ -331,10 +184,84 @@ def _lsh_cc_driver(texts: list[str]) -> list[tuple[str, str]]:
     return out
 
 
+def _lsh_cc_driver(texts: list[str]) -> list[tuple[str, str]]:
+    """Driver tier: the kernel over all forms at once, numpy bucket
+    grouping, then :func:`_verified_pairs` and :func:`_union_find`.
+    Exists because the distributed tier's fixed job latency dominates at
+    dimension scale; here it is one collect."""
+    offs, flat, bands = _minhash_bands(texts)
+    n = len(texts)
+
+    # group forms by exact band key via np.unique over a structured view
+    def band_groups():
+        for band in bands:
+            view = band.view([("", band.dtype)] * band.shape[1]).reshape(n)
+            _, inv = np.unique(view, return_inverse=True)
+            order = np.argsort(inv, kind="stable")
+            bounds = np.flatnonzero(np.diff(inv[order])) + 1
+            yield from np.split(order, bounds)
+
+    return _union_find(texts, *_verified_pairs(offs, flat, band_groups()))
+
+
+def _band_keys(batches):
+    """``mapInPandas`` body of the distributed tier's first pass: the kernel
+    per batch, one row per form with one binary column per band (the raw
+    bytes of the band's uint64 values, an exact key)."""
+    for pdf in batches:
+        texts = pdf["text"].tolist()
+        _, _, bands = _minhash_bands(texts)
+        cols = {"text": texts}
+        for col, keys in zip(_BAND_COLS, bands):
+            raw, w = keys.tobytes(), keys.shape[1] * 8
+            cols[col] = [raw[i * w : (i + 1) * w] for i in range(len(texts))]
+        yield pd.DataFrame(cols)
+
+
+def _bucket_forest(batches):
+    """``mapInPandas`` body of the distributed tier's second pass: verify
+    each bucket of a batch with :func:`_verified_pairs` and emit the batch's
+    spanning forest, every clustered member -> its cluster minimum (at most
+    k - 1 edges per bucket of k forms)."""
+    for pdf in batches:
+        buckets = pdf["texts"].tolist()
+        texts = list(dict.fromkeys(t for members in buckets for t in members))
+        ids = {t: i for i, t in enumerate(texts)}
+        offs, flat, _ = _token_csr(texts)
+        groups = (np.array([ids[t] for t in members]) for members in buckets)
+        yield pd.DataFrame(
+            _union_find(texts, *_verified_pairs(offs, flat, groups)),
+            columns=["text", "canonical_text"],
+        )
+
+
+def _lsh_cc_distributed(forms: DataFrame) -> list[tuple[str, str]]:
+    """Distributed tier: band keys, buckets and their verified spanning
+    forests in Spark; the forest is collected and closed on the driver."""
+    keyed = forms.mapInPandas(
+        _band_keys, "text string, " + ", ".join("%s binary" % c for c in _BAND_COLS)
+    )
+    buckets = (
+        keyed.select("text", F.posexplode(F.array(*_BAND_COLS)).alias("band", "key"))
+        .withColumn("n", F.count("*").over(Window.partitionBy("band", "key")))
+        .filter(F.col("n").between(2, MAX_BUCKET))
+        .groupBy("band", "key")
+        .agg(F.collect_list("text").alias("texts"))
+    )
+    edges = (
+        buckets.select("texts")
+        .mapInPandas(_bucket_forest, "text string, canonical_text string")
+        .collect()
+    )
+    texts = list(dict.fromkeys(t for edge in edges for t in edge))
+    ids = {t: i for i, t in enumerate(texts)}
+    return _union_find(texts, [ids[t] for t, _ in edges], [ids[c] for _, c in edges])
+
+
 def canonicalize_surface_forms(
     df: DataFrame, text_col: str = "obj", driver_threshold: int = 200_000
 ) -> DataFrame:
-    """Return (text, canonical_text) — the LSH+CC rewrite table for a column
+    """Return (text, canonical_text) — the LSH rewrite table for a column
     of surface forms, containing **only non-identity rewrites**
     (text != canonical_text).  Forms with no near-duplicate simply don't
     appear; consumers rewrite with a left join + ``coalesce`` (see
@@ -343,32 +270,21 @@ def canonicalize_surface_forms(
     stays viable at web scale (ADVICE r1).
 
     Form sets up to ``driver_threshold`` distinct values run the driver tier
-    (one distinct + collect instead of the distributed tier's chain of jobs,
-    whose fixed scheduling latency dominates at dimension scale); larger
-    sets run the distributed tier.  Both give the same table."""
-    spark = df.sparkSession
+    (one distinct + collect instead of the distributed tier's jobs, whose
+    fixed scheduling latency dominates at dimension scale); larger sets run
+    the distributed tier.  Both give the same table."""
     forms = df.select(F.col(text_col).alias("text")).distinct().cache()
-    # one job instead of count + collect: a (threshold+1)-limited collect both
-    # sizes the form set and, when it fits, IS the form set (the cache serves
-    # the distributed tier otherwise)
-    head = forms.limit(driver_threshold + 1).collect()
-    if len(head) <= driver_threshold:
-        pairs = _lsh_cc_driver([r["text"] for r in head])
-        return spark.createDataFrame(pairs, "text string, canonical_text string")
-    keyed = forms.mapInPandas(
-        _band_keys,
-        "text string, tokens array<string>, "
-        + ", ".join("%s binary" % c for c in _BAND_COLS),
-    ).cache()
-    verified = verify_jaccard(lsh_candidate_pairs(keyed), keyed).cache()
-    if not verified.limit(1).count():
-        # no near-duplicates at all: empty rewrite table, skip the CC loop
-        return spark.createDataFrame([], "text string, canonical_text string")
-    comps = connected_components(verified)
-    # canonical member per component = lexicographic min id (== min text)
-    canon = comps.groupBy("comp").agg(F.min("id").alias("canonical_text"))
-    return (
-        comps.join(canon, "comp")
-        .select(F.col("id").alias("text"), "canonical_text")
-        .filter(F.col("text") != F.col("canonical_text"))
+    try:
+        # one job instead of count + collect: a (threshold+1)-limited collect
+        # both sizes the form set and, when it fits, IS the form set (the
+        # cache serves the distributed tier otherwise)
+        head = forms.limit(driver_threshold + 1).collect()
+        if len(head) <= driver_threshold:
+            rewrites = _lsh_cc_driver([r["text"] for r in head])
+        else:
+            rewrites = _lsh_cc_distributed(forms)
+    finally:
+        forms.unpersist()
+    return df.sparkSession.createDataFrame(
+        rewrites, "text string, canonical_text string"
     )

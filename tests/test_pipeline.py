@@ -266,22 +266,6 @@ def test_crash_orphan_versions_swept_on_next_commit(spark, tmp_path):
     ]
 
 
-def test_connected_components_distributed_path(spark):
-    from folkscope_spark.canonicalize import connected_components
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y"), ("p", "q"), ("q", "r"), ("r", "s")],
-        "id_a string, id_b string",
-    )
-    comps = connected_components(edges)
-    got = {(r["id"], r["comp"]) for r in comps.collect()}
-    assert got == {
-        ("a", "a"), ("b", "a"), ("c", "a"),
-        ("x", "x"), ("y", "x"),
-        ("p", "p"), ("q", "p"), ("r", "p"), ("s", "p"),
-    }
-
-
 def test_concept_triples_match_oracle(result):
     """Concept-KG plumbing parity: the distributed conceptualize + (eid,
     relation)-keyed join must reproduce the single-process port's

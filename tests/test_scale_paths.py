@@ -1,4 +1,4 @@
-"""Scale-path correctness: zipWithIndex dictionary, contracting CC,
+"""Scale-path correctness: zipWithIndex dictionary, both canonicalize tiers,
 binned PR sweep, relational NER-counter merge (VERDICT r1 'weak' items)."""
 
 import pytest
@@ -25,33 +25,6 @@ def test_build_dictionary_is_global_rank(spark):
     out = {r["key"]: r["id"] for r in build_dictionary(df, "key", n_partitions=8).collect()}
     expected = {k: i for i, k in enumerate(sorted(set(keys)))}
     assert out == expected
-
-
-def test_connected_components_long_chain_distributed(spark):
-    """A descending-id chain is the contraction worst case: pointer halving
-    must converge well inside max_iter (O(log n)), labels exact."""
-    from folkscope_spark.canonicalize import connected_components
-
-    n = 200
-    rows = [("n%04d" % (i + 1), "n%04d" % i) for i in range(n)]  # chain n0..n200
-    edges = spark.createDataFrame(rows, "id_a string, id_b string")
-    comps = connected_components(edges, max_iter=12)
-    got = {r["id"]: r["comp"] for r in comps.collect()}
-    assert set(got.values()) == {"n0000"}
-    assert len(got) == n + 1
-
-
-def test_connected_components_multiple_clusters_distributed(spark):
-    from folkscope_spark.canonicalize import connected_components
-
-    rows = [("a1", "a2"), ("a2", "a3"), ("b1", "b2"), ("c1", "c9"), ("c9", "c5")]
-    edges = spark.createDataFrame(rows, "id_a string, id_b string")
-    got = {r["id"]: r["comp"] for r in connected_components(edges).collect()}
-    assert got == {
-        "a1": "a1", "a2": "a1", "a3": "a1",
-        "b1": "b1", "b2": "b1",
-        "c1": "c1", "c9": "c1", "c5": "c1",
-    }
 
 
 def test_canonicalize_surface_forms_matches_exact_jaccard_closure(spark):
@@ -236,6 +209,23 @@ def test_canonicalize_hot_bucket_cap_on_both_tiers(spark):
             assert {r["canonical_text"] for r in got} <= {min(spellings[:n])}
 
 
+def test_canonicalize_unpersists_its_caches(spark):
+    """Neither tier leaves a cached frame behind in the session."""
+    from folkscope_spark.canonicalize import canonicalize_surface_forms
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    df = spark.createDataFrame(
+        [("red apple pie",), ("Red apple pie",), ("green tea",)], "obj string"
+    )
+    for kw in ({}, {"driver_threshold": 0}):
+        spark.catalog.clearCache()
+        assert cache_manager.isEmpty()
+        assert canonicalize_surface_forms(df, "obj", **kw).collect() == [
+            ("red apple pie", "Red apple pie")
+        ]
+        assert cache_manager.isEmpty(), kw
+
+
 def test_pr_curve_binned_matches_exact_at_bin_edges(spark):
     """With scores exactly on bin edges the binned sweep reproduces the exact
     per-row sweep's cumulative counts."""
@@ -387,50 +377,3 @@ def test_match_fat_thinning_keyed_by_relation_and_eid(spark):
     assert by_rel["capableOf"]["frequency"] == 2.0
     assert by_rel["capableOf"]["n_sentences"] == 2
     assert by_rel["usedFor"]["n_sentences"] == 1
-
-
-def test_connected_components_random_graph_matches_union_find(spark):
-    """Randomized differential for the distributed CC (star-contraction +
-    pointer-halving): a seeded 220-node / 260-edge random graph vs a plain
-    union-find oracle.  Compared as PARTITIONS (not labels): the distributed
-    algorithm guarantees min-id labels per component, so labels are checked
-    against the oracle component's min too."""
-    import random
-
-    from folkscope_spark.canonicalize import connected_components
-
-    rng = random.Random(20260818)
-    nodes = ["v%03d" % i for i in range(220)]
-    rows = []
-    seen = set()
-    while len(rows) < 260:
-        a, b = rng.choice(nodes), rng.choice(nodes)
-        if a != b and (a, b) not in seen:
-            seen.add((a, b))
-            rows.append((a, b))
-
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in rows:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-    oracle = {}
-    for a, b in rows:
-        for x in (a, b):
-            oracle.setdefault(find(x), set()).add(x)
-    want = {min(members): members for members in oracle.values()}
-
-    edges = spark.createDataFrame(rows, "id_a string, id_b string")
-    got_rows = connected_components(edges).collect()
-    got = {}
-    for r in got_rows:
-        got.setdefault(r["comp"], set()).add(r["id"])
-    assert got == want
