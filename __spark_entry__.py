@@ -889,12 +889,35 @@ def _fs_multimodal_oracle_sql() -> str:
     )
 
 
+# fixed instance -> top-K (concept, likelihood) table over the testdata
+# vocabulary (the relational probase_topk build is oracle-tested separately)
+_FS_TOPK = {
+    "table": [("structure", 0.6), ("object", 0.4)],
+    "query": [("request", 0.7), ("question", 0.3)],
+    "row": [("record", 1.0)],
+    "data": [("information", 0.8), ("asset", 0.2)],
+    "key": [("identifier", 1.0)],
+    "join": [("operation", 1.0)],
+    "filter": [("operation", 0.9), ("device", 0.1)],
+}
+
+
+def _fs_probase(spark):
+    """``_FS_TOPK`` as a top-K table, through the pipeline's Probase delivery."""
+    from folkscope_spark.conceptualize import deliver_probase
+
+    return deliver_probase(spark.createDataFrame(
+        [(i, c, lik) for i, cs in _FS_TOPK.items() for c, lik in cs],
+        "instance string, concept string, likelihood double",
+    ))
+
+
 def q_fs_conceptualize(spark, sf):  # Probase conceptualization kernel (J3/T4/F11)
     """Parses document prefixes into pseudo-eventualities and runs the full
     reference-parity conceptualize UDF (seed rule + combination search +
     phrase-level second pass + merge + seed-rule fallback).
 
-    Oracle-checked: over this corpus + the fixed 7-key topk_map the heap
+    Oracle-checked: over this corpus + the fixed 7-key ``_FS_TOPK`` the heap
     bound ``top_k**top_k`` (3125) never binds (candidates per level <=
     3^4*2^3-1 = 647), so the combination search degenerates to the full
     independent keep-or-substitute enumeration per matched key — word level
@@ -909,17 +932,6 @@ def q_fs_conceptualize(spark, sf):  # Probase conceptualization kernel (J3/T4/F1
     from folkscope_spark.conceptualize import conceptualize
     from folkscope_spark.nlp import parse_sentence
 
-    # fixed instance->concept likelihood table over the testdata vocabulary
-    # (the relational probase_topk build is oracle-tested separately)
-    topk_map = {
-        "table": [("structure", 0.6), ("object", 0.4)],
-        "query": [("request", 0.7), ("question", 0.3)],
-        "row": [("record", 1.0)],
-        "data": [("information", 0.8), ("asset", 0.2)],
-        "key": [("identifier", 1.0)],
-        "join": [("operation", 1.0)],
-        "filter": [("operation", 0.9), ("device", 0.1)],
-    }
     d = _t(spark, sf, "documents")
 
     ev_schema = (
@@ -964,7 +976,7 @@ def q_fs_conceptualize(spark, sf):  # Probase conceptualization kernel (J3/T4/F1
             )
 
     events = d.select("doc_id", "text").mapInPandas(mk_events, schema=ev_schema)
-    c = conceptualize(events, topk_map, start_index_mode="none")
+    c = conceptualize(events, _fs_probase(spark), start_index_mode="none")
     return c.select("eid", "concept_text", F.round("score", 6).alias("score"))
 
 
@@ -985,15 +997,6 @@ def q_fs_concept_text(spark, sf):  # whole-sentence conceptualized_text pass
     from folkscope_spark.conceptualize import conceptualize_text
     from folkscope_spark.nlp import parse_sentence
 
-    topk_map = {
-        "table": [("structure", 0.6), ("object", 0.4)],
-        "query": [("request", 0.7), ("question", 0.3)],
-        "row": [("record", 1.0)],
-        "data": [("information", 0.8), ("asset", 0.2)],
-        "key": [("identifier", 1.0)],
-        "join": [("operation", 1.0)],
-        "filter": [("operation", 0.9), ("device", 0.1)],
-    }
     d = _t(spark, sf, "documents")
 
     parsed_schema = (
@@ -1031,7 +1034,7 @@ def q_fs_concept_text(spark, sf):  # whole-sentence conceptualized_text pass
             )
 
     parsed = d.select("doc_id", "text").mapInPandas(mk_parsed, schema=parsed_schema)
-    c = conceptualize_text(parsed, topk_map, start_index_mode="none")
+    c = conceptualize_text(parsed, _fs_probase(spark), start_index_mode="none")
     return c.select("sid", "concept_text", F.round("score", 6).alias("score"))
 
 

@@ -5,9 +5,9 @@ Spark-first rewrite of ``/root/reference/src/pattern/conceptualizer.py``:
 * the instance->concept likelihood table is computed **relationally** —
   ``likelihood = freq / sum(freq) over (partition by instance)``
   (``conceptualizer.py:76-79``) with per-instance top-K dedupe by hyphenated
-  concept name (``:506-524``) — then either collected and ``sc.broadcast``
-  (a small Probase) or equi-joined into a bounded per-row mini-map
-  (:func:`concept_minimaps`, any size);
+  concept name (``:506-524``) — then, as :func:`deliver_probase` decides by
+  its size, either collected and ``sc.broadcast`` or equi-joined into a
+  bounded per-row mini-map (:func:`concept_minimaps`, any size);
 * the bounded combination search over noun-slot substitutions
   (``:526-566``: subsets of matched nouns x top-K concepts each, score =
   product of likelihoods, heap capped at ``topK**topK``) runs per row inside
@@ -54,15 +54,24 @@ from __future__ import annotations
 
 import hashlib
 import heapq
+from dataclasses import dataclass
 from itertools import combinations, repeat
 
 import pandas as pd
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .metrics import batch_timer
 from .relations import POS_TEMPLATES, template_anchor_len
 
 DEFAULT_TOPK = 5
+
+# Top-K tables up to this row count are collected whole and shipped with
+# sc.broadcast.  Above it nothing is collected: the top-K table is equi-joined
+# and each row gets a bounded per-row mini-map (concept_minimaps), the one
+# tier whose driver footprint does not grow with Probase (a collected
+# 5M-row dict reaches GBs; the real Probase is ~33M rows).
+PROBASE_BROADCAST_CUTOFF = 100_000
 
 # conceptualizer.py:231-236 — NER types the seed rule rewrites
 SELECTED_NERS = frozenset(
@@ -144,42 +153,61 @@ def concept_minimaps(
 
 def _topk_dict(entries) -> dict[str, list[tuple[str, float]]]:
     """instance -> [(concept, likelihood)] from (instance, concept,
-    likelihood) records, each list ordered likelihood desc, concept asc —
-    ``probase_concepts`` truncates to ``top_k`` positionally."""
+    likelihood) records or None, each list ordered likelihood desc, concept
+    asc — ``probase_concepts`` truncates to ``top_k`` positionally."""
     out: dict[str, list[tuple[str, float]]] = {}
-    for e in entries:
+    for e in entries if entries is not None else ():
         out.setdefault(e["instance"], []).append((e["concept"], float(e["likelihood"])))
     for v in out.values():
         v.sort(key=lambda x: (-x[1], x[0]))
     return out
 
 
-def _row_topk(entries) -> dict[str, list[tuple[str, float]]]:
-    """The per-row instance->top-K dict from a ``_concept_map`` array (same
-    value order as :func:`collect_topk_map`)."""
-    return _topk_dict(entries if entries is not None else ())
+@dataclass(frozen=True)
+class ProbaseDelivery:
+    """The top-K Probase dimension as both conceptualization passes read it:
+    ``broadcast`` (an ``sc.broadcast`` instance->top-K dict) or ``table``
+    (the cached :func:`probase_topk` table, joined per row by
+    :func:`concept_minimaps` with n-grams up to ``max_gram_len`` tokens, the
+    longest instance)."""
+
+    broadcast: Broadcast | None = None
+    table: DataFrame | None = None
+    max_gram_len: int = 1
+
+    @property
+    def mode(self) -> str:
+        return "broadcast" if self.table is None else "relational"
+
+    def release(self) -> None:
+        """Destroy the broadcast or unpersist the table; frames conceptualized
+        with this delivery cannot be recomputed afterwards."""
+        if self.table is None:
+            self.broadcast.destroy()
+        else:
+            self.table.unpersist()
 
 
-def max_instance_tokens(probase: DataFrame) -> int:
-    """Longest Probase instance in tokens — the exact n-gram bound for
-    :func:`concept_minimaps` (one scalar aggregation)."""
-    r = probase.agg(F.max(F.size(F.split("instance", " "))).alias("m")).collect()
-    return int(r[0]["m"] or 1)
+def deliver_probase(topk: DataFrame, mode: str = "auto") -> ProbaseDelivery:
+    """Size the top-K table and pick its delivery.  ``mode`` is ``"auto"`` or
+    ``"relational"`` (never collect the dimension).
 
-
-def collect_topk_map(topk: DataFrame) -> dict[str, list[tuple[str, float]]]:
-    """Collect the whole instance->top-K dimension to the driver.  Only for a
-    small Probase (``pipeline.PROBASE_BROADCAST_CUTOFF``): the map grows with
-    the dimension, which is why larger ones take :func:`concept_minimaps`.
-    Ship the result with ``sc.broadcast`` (once per executor), not in a task
-    closure."""
-    return _topk_dict(topk.collect())
-
-
-def _resolve_topk(topk_map) -> dict[str, list[tuple[str, float]]]:
-    """Accept a plain dict or a ``pyspark.Broadcast`` of one (resolved inside
-    the UDF, so the broadcast ships per executor instead of per task)."""
-    return topk_map.value if hasattr(topk_map, "value") else topk_map
+    In ``auto``, one ``limit(PROBASE_BROADCAST_CUTOFF + 1).collect()`` both
+    sizes the table and, when it fits, is the dict that gets broadcast (once
+    per executor).  Otherwise the table stays cached for the mini-map joins;
+    the job that fills the cache also computes the n-gram bound.  Either way
+    the top-K window runs once."""
+    if mode not in ("auto", "relational"):
+        raise ValueError(f"probase_mode must be 'auto' or 'relational', not {mode!r}")
+    topk = topk.cache()
+    if mode == "auto":
+        head = topk.limit(PROBASE_BROADCAST_CUTOFF + 1).collect()
+        if len(head) <= PROBASE_BROADCAST_CUTOFF:
+            topk.unpersist()
+            sc = topk.sparkSession.sparkContext
+            return ProbaseDelivery(broadcast=sc.broadcast(_topk_dict(head)))
+    bound = topk.agg(F.max(F.size(F.split("instance", " "))).alias("m")).first()
+    return ProbaseDelivery(table=topk, max_gram_len=int(bound["m"] or 1))
 
 
 def cid_of(words: list[str]) -> str:
@@ -515,9 +543,7 @@ def _concept_pass(
     in_cols: list[str],
     row_fn,
     out_schema: str,
-    topk_map,
-    topk_table: DataFrame | None,
-    max_gram_len: int,
+    probase: ProbaseDelivery,
     start_index_mode: str,
     kernel_acc,
 ) -> DataFrame:
@@ -525,14 +551,10 @@ def _concept_pass(
     row key and ``relation`` followed by the words column; ``row_fn(row, tm,
     start_index)`` maps one input row to its output tuples.
 
-    Two dimension-delivery modes, same results:
-
-    * ``topk_map`` — driver-collected dict (or ``sc.broadcast`` of one),
-      right when the whole top-K dimension is small;
-    * ``topk_table`` — the distributed :func:`probase_topk` DataFrame; each
-      row gets a bounded per-row mini-map via :func:`concept_minimaps`
-      (equi-join + collect_list, zero driver collect — the 100 TB path).
-      ``max_gram_len`` must be >= :func:`max_instance_tokens`.
+    ``probase`` (see :func:`deliver_probase`) gives every row either the
+    broadcast dict or, for the relational tier, its bounded per-row mini-map
+    via :func:`concept_minimaps` (equi-join + collect_list, zero driver
+    collect — the 100 TB path); same results.
 
     The per-relation template ``start_index`` (see
     :func:`template_start_index`) is resolved once on the driver and shipped
@@ -541,30 +563,31 @@ def _concept_pass(
         rel: template_start_index(rel, start_index_mode) for rel in POS_TEMPLATES
     }
     out_cols = [f.split()[0] for f in out_schema.split(", ")]
-    relational = topk_table is not None
+    bc = probase.broadcast
     src = src.select(in_cols)
-    if relational:
+    if bc is None:
         keys = in_cols[:2]
         src = src.join(
             concept_minimaps(
-                src, topk_table, key_cols=tuple(keys), words_col=in_cols[2],
-                max_len=max_gram_len,
+                src, probase.table, key_cols=tuple(keys), words_col=in_cols[2],
+                max_len=probase.max_gram_len,
             ),
             keys,
             "left",
         )
 
     def run(batches):
-        tm = None if relational else _resolve_topk(topk_map)
         for pdf in batches:
             with batch_timer(kernel_acc):
-                rows = []
-                maps = pdf["_concept_map"] if relational else repeat(None)
-                for row, entries in zip(zip(*(pdf[c] for c in in_cols)), maps):
-                    rows.extend(row_fn(
-                        row, tm if tm is not None else _row_topk(entries),
-                        start_indices.get(row[1], 0),
-                    ))
+                maps = (
+                    map(_topk_dict, pdf["_concept_map"]) if bc is None
+                    else repeat(bc.value)
+                )
+                rows = [
+                    t
+                    for row, tm in zip(zip(*(pdf[c] for c in in_cols)), maps)
+                    for t in row_fn(row, tm, start_indices.get(row[1], 0))
+                ]
                 out = pd.DataFrame(rows, columns=out_cols)
             yield out
 
@@ -573,10 +596,8 @@ def _concept_pass(
 
 def conceptualize(
     events: DataFrame,
-    topk_map: dict[str, list[tuple[str, float]]] | None,
+    probase: ProbaseDelivery,
     start_index_mode: str = "tokens",
-    topk_table: DataFrame | None = None,
-    max_gram_len: int = 4,
     kernel_acc=None,
 ) -> DataFrame:
     """Merged eventualities (:func:`folkscope_spark.match.merge_eventualities`)
@@ -590,16 +611,14 @@ def conceptualize(
         _event_rows,
         "pid string, cid string, eid string, relation string, "
         "concept_text string, pattern string, score double, frequency double",
-        topk_map, topk_table, max_gram_len, start_index_mode, kernel_acc,
+        probase, start_index_mode, kernel_acc,
     )
 
 
 def conceptualize_text(
     parsed: DataFrame,
-    topk_map: dict[str, list[tuple[str, float]]] | None,
+    probase: ProbaseDelivery,
     start_index_mode: str = "tokens",
-    topk_table: DataFrame | None = None,
-    max_gram_len: int = 4,
     kernel_acc=None,
 ) -> DataFrame:
     """``conceptualized_text`` — the whole-parsed-line pass the reference runs
@@ -613,7 +632,7 @@ def conceptualize_text(
         ["sid", "relation", "lemmas", "pos_tags", "ners", "dependencies"],
         _text_rows,
         "sid string, relation string, cid string, concept_text string, score double",
-        topk_map, topk_table, max_gram_len, start_index_mode, kernel_acc,
+        probase, start_index_mode, kernel_acc,
     )
 
 

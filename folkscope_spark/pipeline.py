@@ -17,7 +17,10 @@ dictionaries in their closures.
 from __future__ import annotations
 
 import argparse
+import shutil
 import time
+import uuid
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -25,22 +28,71 @@ from . import generate, materialize, parse, patterns, score, synthetic
 from .canonicalize import canonicalize_surface_forms
 from .conceptualize import (
     aggregate_concepts,
-    collect_topk_map,
     conceptualize,
     conceptualize_text,
-    max_instance_tokens,
+    deliver_probase,
     probase_topk,
 )
 from .match import match_patterns, merge_eventualities
 from .metrics import KernelTimers
 from .snapshots import SnapshotStore
 
-# Probase dimensions up to this row count are collected whole and shipped with
-# sc.broadcast.  Above it nothing is collected: the top-K table is equi-joined
-# and each row gets a bounded per-row mini-map (conceptualize.concept_minimaps),
-# the one tier whose driver footprint does not grow with Probase (a collected
-# 5M-row dict reaches GBs; the real Probase is ~33M rows).
-PROBASE_BROADCAST_CUTOFF = 100_000
+
+class _MemStore:
+    """Storeless stand-in.  Two materialization classes, and neither runs a
+    job of its own (every eager action is one more fixed-cost job chain, the
+    non-scaling O of the fitted t = C/n + O cost model — VERDICT r2 #4):
+
+    * lazy (``_LAZY``) — one consumer; Spark fuses the stage into its
+      consumer's job (e.g. generation runs inside the job that fills scored);
+    * cached — every other stage: ``cache()`` and no action.  The first
+      consumer's job fills the cache (the ``sent_counts`` collect for parsed,
+      canonicalize's first action for matched); later consumers read it.
+
+    So ``stages`` times plan construction for these stages; per-layer cost is
+    in Spark's status store (per-job time) and the kernel timers.  Each run
+    writes under its own ``/tmp/folkscope_mem_<run id>``, deleted on
+    ``release()`` or, failing that, when the store is collected."""
+
+    # eventualities is cached, not lazy: the relational-Probase conceptualize
+    # plan reads it twice (events x its own mini-map join), and a lazy
+    # stand-in would recompute the merge agg per read
+    _LAZY = {"assertions", "pattern_counts", "canon_map"}
+
+    def __init__(self):
+        self.root = "/tmp/folkscope_mem_" + uuid.uuid4().hex
+        self.cached: list[DataFrame] = []
+        self._rmtree = weakref.finalize(self, shutil.rmtree, self.root, True)
+
+    def stage(self, _spark, name, _fp, build, **kw):
+        df = build()
+        if name not in self._LAZY:
+            df = df.cache()
+            self.cached.append(df)
+        return df
+
+    def data_path(self, name):
+        return f"{self.root}/{name}"
+
+    def manifest(self, name):
+        return None
+
+    def release(self) -> None:
+        for df in self.cached:
+            df.unpersist()
+        self._rmtree()
+
+
+class RunResult(dict):
+    def release(self) -> None:
+        """Unpersist the frames this run cached (storeless stages, the
+        relational top-K table), destroy its Probase broadcast and delete its
+        storeless output directory.  Call it after the last read of a frame:
+        concept frames cannot be recomputed afterwards."""
+        if isinstance(self["store"], _MemStore):
+            self["store"].release()
+        if self["probase"] is not None:
+            self["probase"].release()
 
 
 def run_pipeline(
@@ -59,8 +111,9 @@ def run_pipeline(
     probase: DataFrame | None = None,
     probase_rows: int | None = None,
     probase_mode: str = "auto",
-) -> dict:
-    """Returns {"triples": DataFrame, "stages": {stage: seconds}, ...}.
+) -> RunResult:
+    """Returns {"triples": DataFrame, "stages": {stage: seconds}, ...}; call
+    its ``release()`` when done with the frames.
 
     ``out_dir=None`` runs storeless: stage outputs are cached in memory
     instead of snapshot-committed (fast smoke/test mode, no resume).  A
@@ -68,19 +121,21 @@ def run_pipeline(
     construction; the work lands in whichever timed step runs the first
     action on it (see ``_MemStore``).
 
-    ``dedupe_parse`` selects nothing: every run parses, mines and matches
-    each distinct (relation, tail) once and re-attaches the per-row subjects
-    and scores by its md5 key.  The keyword is accepted only so existing
-    callers that pass it keep working.
+    ``dedupe_parse`` and ``probase_rows`` select nothing.  Every run parses,
+    mines and matches each distinct (relation, tail) once and re-attaches
+    the per-row subjects and scores by its md5 key; the Probase tier is
+    sized by the collect that ships it.  Both keywords are accepted only so
+    existing callers that pass them keep working.
 
-    ``probase_mode`` is ``"auto"`` (tier chosen by Probase size, see
-    ``PROBASE_BROADCAST_CUTOFF``) or ``"relational"`` (never collect the
-    dimension)."""
-    if probase_mode not in ("auto", "relational"):
-        raise ValueError(
-            f"probase_mode must be 'auto' or 'relational', not {probase_mode!r}"
-        )
-    store = SnapshotStore(out_dir) if out_dir else None
+    ``probase_mode`` is ``"auto"`` (tier chosen by the top-K table's row
+    count, see ``conceptualize.deliver_probase``) or ``"relational"`` (never
+    collect the dimension); ``result["probase_mode"]`` reports the tier."""
+    delivery = None
+    if with_concepts:
+        if probase is None:
+            probase = synthetic.probase_df(spark)
+        delivery = deliver_probase(probase_topk(probase), probase_mode)
+    store = SnapshotStore(out_dir) if out_dir else _MemStore()
     timings: dict[str, float] = {}
     # per-kernel wall/cputime accumulators: after the run,
     # result["kernel_timers"].seconds() splits each Python-kernel stage's wall
@@ -95,42 +150,6 @@ def run_pipeline(
         out = fn()
         timings[name] = round(time.time() - t0, 3)
         return out
-
-    class _MemStore:
-        """Storeless stand-in.  Two materialization classes, and neither runs
-        a job of its own (every eager action is one more fixed-cost job
-        chain, the non-scaling O of the fitted t = C/n + O cost model —
-        VERDICT r2 #4):
-
-        * lazy (``_LAZY``) — one consumer; Spark fuses the stage into its
-          consumer's job (e.g. generation runs inside the job that fills
-          scored);
-        * cached — every other stage: ``cache()`` and no action.  The first
-          consumer's job fills the cache (the ``sent_counts`` collect for
-          parsed, canonicalize's first action for matched); later consumers
-          read it.
-
-        So ``stages`` times plan construction for these stages; per-layer
-        cost is in Spark's status store (per-job time) and the kernel
-        timers."""
-
-        # eventualities is cached, not lazy: the relational-Probase
-        # conceptualize plan reads it twice (events x its own mini-map
-        # join), and a lazy stand-in would recompute the merge agg per read
-        _LAZY = {"assertions", "pattern_counts", "canon_map"}
-
-        def stage(self, _spark, name, _fp, build, **kw):
-            df = build()
-            return df if name in self._LAZY else df.cache()
-
-        def data_path(self, name):
-            return "/tmp/folkscope_mem_" + name
-
-        def manifest(self, name):
-            return None
-
-    if store is None:
-        store = _MemStore()
 
     if pages is None:
         pages = synthetic.pages_df(spark, n_pages, n_items)
@@ -329,47 +348,8 @@ def run_pipeline(
     )
 
     # -- conceptualization ---------------------------------------------------
-    concepts = None
-    concept_triples = None
-    concept_text = None
-    mode = None
+    concepts = concept_triples = concept_text = None
     if with_concepts:
-        if probase is None:
-            probase = synthetic.probase_df(spark)
-        # Two dimension-delivery tiers, chosen by Probase size, identical
-        # results:
-        #   <= BROADCAST_CUTOFF  collect the whole top-K dict, sc.broadcast
-        #                        once per executor;
-        #   >  BROADCAST_CUTOFF  never collect: equi-join the distributed
-        #                        top-K table and ship each row its bounded
-        #                        mini-map (fully relational, 100 TB-safe).
-        # The size probe runs only when it decides the tier, and is bounded
-        # (limit(cutoff+1).count(), never a full count of a committed
-        # multi-GB dimension — ADVICE r3); callers that know the size (e.g.
-        # from a snapshot manifest) pass probase_rows.
-        mode = probase_mode
-        if mode == "auto":
-            n_probase = (
-                probase_rows
-                if probase_rows is not None
-                else probase.limit(PROBASE_BROADCAST_CUTOFF + 1).count()
-            )
-            mode = "relational" if n_probase > PROBASE_BROADCAST_CUTOFF else "broadcast"
-        topk_map = None
-        topk_table = None
-        gram_len = 4
-        if mode == "relational":
-            gram_len = max_instance_tokens(probase)
-            topk_table = probase_topk(probase)
-            if with_concept_text:
-                # two kernels consume the distributed top-K dim (events +
-                # whole-corpus text); cache it so the rank window over the
-                # multi-M-row Probase runs once, not per consumer
-                topk_table = topk_table.cache()
-        else:
-            topk_map = spark.sparkContext.broadcast(
-                collect_topk_map(probase_topk(probase))
-            )
         concept_rows = timed(
             "conceptualize",
             lambda: store.stage(
@@ -377,8 +357,7 @@ def run_pipeline(
                 "concept_rows",
                 fp,
                 lambda: conceptualize(
-                    events, topk_map, topk_table=topk_table, max_gram_len=gram_len,
-                    kernel_acc=kernel_timers["conceptualize"],
+                    events, delivery, kernel_acc=kernel_timers["conceptualize"],
                 ),
             ),
         )
@@ -425,8 +404,7 @@ def run_pipeline(
                     "concept_text",
                     fp,
                     lambda: conceptualize_text(
-                        parsed, topk_map, topk_table=topk_table, max_gram_len=gram_len,
-                        kernel_acc=kernel_timers["concept_text"],
+                        parsed, delivery, kernel_acc=kernel_timers["concept_text"],
                     ),
                 ),
             )
@@ -441,7 +419,7 @@ def run_pipeline(
         ),
     )
 
-    return {
+    return RunResult({
         "pages": pages,
         "assertions": assertions,
         "scored": scored,
@@ -457,9 +435,10 @@ def run_pipeline(
         "stages": timings,
         "counters": counters,
         "kernel_timers": kernel_timers,
-        "probase_mode": mode,
+        "probase_mode": delivery.mode if delivery else None,
+        "probase": delivery,
         "store": store,
-    }
+    })
 
 
 def main():

@@ -203,7 +203,7 @@ def test_probase_topk_relational(tmp_path):
     """likelihood = freq/sum(freq) per instance + top-K dedupe by hyphenated
     name (conceptualizer.py:76-79,506-524) computed relationally."""
     from folkscope_spark.session import get_spark
-    from folkscope_spark.conceptualize import probase_topk, collect_topk_map
+    from folkscope_spark.conceptualize import deliver_probase, probase_topk
 
     spark = get_spark(app="t", master="local[2]", shuffle_partitions=2)
     probase = spark.createDataFrame(
@@ -216,7 +216,7 @@ def test_probase_topk_relational(tmp_path):
         ],
         "concept string, instance string, freq long",
     )
-    m = collect_topk_map(probase_topk(probase, k=2))
+    m = deliver_probase(probase_topk(probase, k=2)).broadcast.value
     assert m["cotton"][0] == ("natural-material", pytest.approx(0.6))
     assert m["cotton"][1] == ("material", pytest.approx(0.4))
     assert len(m["cotton"]) == 2  # top-K cut drops the zero-freq concept
@@ -230,9 +230,9 @@ def test_concept_minimaps_rebuild_matches_collected_map():
     the (likelihood desc, concept asc) value order."""
     from folkscope_spark.session import get_spark
     from folkscope_spark.conceptualize import (
-        _row_topk,
-        collect_topk_map,
+        _topk_dict,
         concept_minimaps,
+        deliver_probase,
         probase_topk,
     )
 
@@ -249,7 +249,7 @@ def test_concept_minimaps_rebuild_matches_collected_map():
         "concept string, instance string, freq long",
     )
     tk = probase_topk(probase)
-    full = collect_topk_map(tk)
+    full = deliver_probase(tk).broadcast.value
     rows = spark.createDataFrame(
         [
             ("e1", "r1", ["the", "cotton", "shirt"]),
@@ -259,7 +259,7 @@ def test_concept_minimaps_rebuild_matches_collected_map():
         "eid string, relation string, words array<string>",
     )
     got = {
-        (r["eid"], r["relation"]): _row_topk(r["_concept_map"])
+        (r["eid"], r["relation"]): _topk_dict(r["_concept_map"])
         for r in concept_minimaps(rows, tk, max_len=2).collect()
     }
     assert got[("e1", "r1")] == {
@@ -334,29 +334,3 @@ def test_aggregate_concepts_multi_cid_exact():
     # c1 pattern freqs: p0 and p1 each 20 rows x 2.0 -> tie broken by name
     assert out["c1"]["dominant_pattern"] == "p0"
     assert out["c1"]["cscore"] == pytest.approx(sum(0.1 * (i % 7) * 2.0 for i in range(40)))
-
-
-def test_conceptualize_accepts_broadcast_topk(spark=None):
-    """The UDF resolves a sc.broadcast-shipped map identically to a dict."""
-    from folkscope_spark.conceptualize import conceptualize
-    from folkscope_spark.session import get_spark
-
-    spark = get_spark(app="t", master="local[2]", shuffle_partitions=2)
-    rows = [
-        ("e1", "capableOf", ["dog", "run"], ["NN", "VB"],
-         [{"O": 1.0}, {"O": 1.0}], [(1, "nsubj", 0)], "p", 1.0)
-    ]
-    schema = (
-        "eid string, relation string, words array<string>, "
-        "pos_tags array<string>, ner_counters array<map<string,double>>, "
-        "dependencies array<struct<gov:int,rel:string,dep:int>>, "
-        "pattern_sig string, frequency double"
-    )
-    events = spark.createDataFrame(rows, schema)
-    tm = {"dog": [("animal", 1.0)]}
-    plain = {(r["cid"], round(r["score"], 6)) for r in conceptualize(events, tm).collect()}
-    bcast = spark.sparkContext.broadcast(tm)
-    via_bc = {
-        (r["cid"], round(r["score"], 6)) for r in conceptualize(events, bcast).collect()
-    }
-    assert plain == via_bc and len(plain) > 0

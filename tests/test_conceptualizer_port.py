@@ -11,9 +11,9 @@ from __future__ import annotations
 import pytest
 
 from folkscope_spark.conceptualize import (
-    collect_topk_map,
     conceptualize_eventuality,
     conceptualize_from_text,
+    deliver_probase,
     probase_topk,
 )
 from folkscope_spark.nlp import parse_sentence
@@ -47,7 +47,7 @@ def topk_map():
         [(c, i, float(f)) for c, i, f in _triples()],
         "concept string, instance string, freq double",
     )
-    return collect_topk_map(probase_topk(df, k=TOPK))
+    return deliver_probase(probase_topk(df, k=TOPK)).broadcast.value
 
 
 def _norm(pairs):

@@ -307,14 +307,14 @@ def test_pipeline_concept_text_pass(spark):
 def test_concept_text_matches_python_kernel(spark, probase_mode):
     """The Spark ``concept_text`` rows equal ``conceptualize_from_text`` run in
     plain Python over the collected ``parsed`` rows, under both Probase
-    deliveries (broadcast dict and the relational ``topk_table`` mini-map)."""
+    deliveries (broadcast dict and the relational per-row mini-map)."""
     from collections import Counter
 
     from folkscope_spark import synthetic
     from folkscope_spark.conceptualize import (
         cid_of,
-        collect_topk_map,
         conceptualize_from_text,
+        deliver_probase,
         probase_topk,
         template_start_index,
     )
@@ -326,7 +326,7 @@ def test_concept_text_matches_python_kernel(spark, probase_mode):
         probase_mode=probase_mode,
     )
     assert r["probase_mode"] == ("broadcast" if probase_mode == "auto" else "relational")
-    topk_map = collect_topk_map(probase_topk(synthetic.probase_df(spark)))
+    topk_map = deliver_probase(probase_topk(synthetic.probase_df(spark))).broadcast.value
     want = Counter()
     for p in r["parsed"].collect():
         deps = [(d["gov"], d["rel"], d["dep"]) for d in p["dependencies"]]
@@ -452,9 +452,10 @@ def test_assertions_anti_join_resume(spark, tmp_path):
 
 def test_pipeline_large_probase_auto_goes_relational(spark):
     """The auto size gate: a Probase padded with 150k noise instances (never
-    in the corpus), past PROBASE_BROADCAST_CUTOFF, and given no size hint
-    takes the relational tier, and the concept KG is unchanged."""
-    from folkscope_spark.pipeline import PROBASE_BROADCAST_CUTOFF, run_pipeline
+    in the corpus), past PROBASE_BROADCAST_CUTOFF top-K rows, takes the
+    relational tier, and the concept KG is unchanged."""
+    from folkscope_spark.conceptualize import PROBASE_BROADCAST_CUTOFF
+    from folkscope_spark.pipeline import run_pipeline
     from folkscope_spark.synthetic import probase_df
 
     kw = dict(
@@ -508,24 +509,75 @@ def test_pipeline_relational_probase_parity(spark):
     assert at == bt and at
 
 
-def test_relational_gate_triggers_on_rows_hint(spark):
-    """auto mode goes relational when the (hinted) dimension size exceeds
-    PROBASE_BROADCAST_CUTOFF — and still produces the same KG."""
-    from folkscope_spark.pipeline import PROBASE_BROADCAST_CUTOFF, run_pipeline
+def test_probase_gate_boundary_counts_topk_rows(spark, monkeypatch):
+    """The auto gate counts top-K rows: a top-K table of exactly the cutoff
+    is broadcast, one row more goes relational, and both build the same
+    concept KG."""
+    from folkscope_spark import conceptualize
+    from folkscope_spark.pipeline import run_pipeline
+    from folkscope_spark.synthetic import probase_df
 
+    pb = probase_df(spark).select("concept", "instance", "freq")
+    n_topk = conceptualize.probase_topk(pb).count()
+    monkeypatch.setattr(conceptualize, "PROBASE_BROADCAST_CUTOFF", n_topk)
     kw = dict(
         n_pages=100, n_items=30, max_extra=1,
         with_concepts=True, with_canonicalize=False,
     )
-    base = run_pipeline(spark, None, **kw)
-    assert base["probase_mode"] == "broadcast"
-    hinted = run_pipeline(
-        spark, None, probase_rows=PROBASE_BROADCAST_CUTOFF + 1, **kw
+    at = run_pipeline(spark, None, probase=pb, **kw)
+    assert at["probase_mode"] == "broadcast"
+    one_more = pb.unionByName(
+        spark.createDataFrame([("noiseconcept", "zz_noise", 1)], pb.schema)
     )
-    assert hinted["probase_mode"] == "relational"
-    a = {tuple(x) for x in base["concept_triples"].collect()}
-    b = {tuple(x) for x in hinted["concept_triples"].collect()}
+    over = run_pipeline(spark, None, probase=one_more, **kw)
+    assert over["probase_mode"] == "relational"
+    a = {tuple(x) for x in at["concept_triples"].collect()}
+    b = {tuple(x) for x in over["concept_triples"].collect()}
     assert a == b and a
+
+
+@pytest.mark.parametrize("probase_mode", ["auto", "relational"])
+def test_release_frees_what_the_run_holds(spark, probase_mode):
+    """``release()`` leaves the session's cache empty (storeless stages and
+    the relational top-K table), destroys the Probase broadcast and deletes
+    the run's storeless output directory."""
+    import os
+
+    from folkscope_spark.pipeline import run_pipeline
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert cache_manager.isEmpty()
+    r = run_pipeline(
+        spark, None, n_pages=60, n_items=30, max_extra=1,
+        with_concept_text=True, probase_mode=probase_mode,
+    )
+    assert r["triples"].count() and r["concept_triples"].count()
+    out = r["store"].data_path("kg_triples")
+    assert os.path.isdir(out)
+    bc = r["probase"].broadcast
+    r.release()
+    assert cache_manager.isEmpty(), probase_mode
+    assert not os.path.exists(os.path.dirname(out))
+    assert (bc is None) == (probase_mode == "relational")
+    assert bc is None or not bc._jbroadcast.isValid()
+
+
+def test_storeless_runs_write_separate_directories(spark):
+    """Two storeless runs in one process never share an output directory,
+    and each stays under the ``/tmp/folkscope_mem_`` prefix."""
+    import os
+
+    from folkscope_spark.pipeline import run_pipeline
+
+    kw = dict(n_pages=20, n_items=10, max_extra=1, with_concepts=False)
+    a, b = run_pipeline(spark, None, **kw), run_pipeline(spark, None, **kw)
+    pa, pb = (r["store"].data_path("kg_triples") for r in (a, b))
+    assert pa != pb and os.path.dirname(pa) != os.path.dirname(pb)
+    for p in (pa, pb):
+        assert p.startswith("/tmp/folkscope_mem_") and os.path.isdir(p)
+    a.release()
+    b.release()
 
 
 def test_pipeline_relational_million_row_probase(spark):

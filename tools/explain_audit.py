@@ -201,9 +201,12 @@ def main():
         ],
     )
 
-    # conceptualization above PROBASE_BROADCAST_CUTOFF: the dimension is
-    # equi-joined and mini-mapped per row — no collect, no driver dict
-    from folkscope_spark.conceptualize import conceptualize, probase_topk
+    # conceptualization above PROBASE_BROADCAST_CUTOFF (or forced relational):
+    # the dimension is equi-joined and mini-mapped per row — no collect, no
+    # driver dict
+    from folkscope_spark.conceptualize import (
+        conceptualize, deliver_probase, probase_topk,
+    )
 
     ev2 = spark.createDataFrame(
         [("e1", "capableOf", ["a", "cotton"], ["DT", "NN"],
@@ -218,7 +221,7 @@ def main():
     )
     audit(
         "conceptualize relational path (no driver-collected dimension)",
-        conceptualize(ev2, None, topk_table=probase_topk(pb), max_gram_len=2),
+        conceptualize(ev2, deliver_probase(probase_topk(pb), "relational")),
         [
             ("n-gram explode generator", r"Generate", True),
             ("per-row mini-map aggregation", r"collect_list", True),
