@@ -38,10 +38,13 @@ Deterministic end to end: hash constants are fixed.
 from __future__ import annotations
 
 import hashlib
+import logging
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
+
+_log = logging.getLogger(__name__)
 
 JACCARD_THRESHOLD = 0.9
 N_HASHES = 16
@@ -281,6 +284,11 @@ def canonicalize_surface_forms(
         if len(head) <= driver_threshold:
             rewrites = _lsh_cc_driver([r["text"] for r in head])
         else:
+            _log.warning(
+                "canonicalize_surface_forms: %d distinct forms seen, more than "
+                "driver_threshold=%d; running the distributed tier",
+                len(head), driver_threshold,
+            )
             rewrites = _lsh_cc_distributed(forms)
     finally:
         forms.unpersist()

@@ -54,6 +54,7 @@ from __future__ import annotations
 
 import hashlib
 import heapq
+import logging
 from dataclasses import dataclass
 from itertools import combinations, repeat
 
@@ -63,6 +64,8 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from .metrics import batch_timer
 from .relations import POS_TEMPLATES, template_anchor_len
+
+_log = logging.getLogger(__name__)
 
 DEFAULT_TOPK = 5
 
@@ -206,6 +209,11 @@ def deliver_probase(topk: DataFrame, mode: str = "auto") -> ProbaseDelivery:
             topk.unpersist()
             sc = topk.sparkSession.sparkContext
             return ProbaseDelivery(broadcast=sc.broadcast(_topk_dict(head)))
+        _log.warning(
+            "deliver_probase: %d top-K rows seen, more than "
+            "PROBASE_BROADCAST_CUTOFF=%d; delivering Probase relationally",
+            len(head), PROBASE_BROADCAST_CUTOFF,
+        )
     bound = topk.agg(F.max(F.size(F.split("instance", " "))).alias("m")).first()
     return ProbaseDelivery(table=topk, max_gram_len=int(bound["m"] or 1))
 

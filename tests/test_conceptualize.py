@@ -308,8 +308,6 @@ def test_aggregate_concepts_bounds_hot_cid():
 def test_aggregate_concepts_multi_cid_exact():
     """Small multi-cid brute-force check: top-N, counts, scores, dominant
     pattern all exact with ties broken deterministically."""
-    import itertools
-
     from folkscope_spark.conceptualize import aggregate_concepts
     from folkscope_spark.session import get_spark
 

@@ -3,6 +3,7 @@
 Heavier than unit tests (spins up Spark) but still < a couple of minutes.
 """
 
+import logging
 import time
 
 import pytest
@@ -509,7 +510,7 @@ def test_pipeline_relational_probase_parity(spark):
     assert at == bt and at
 
 
-def test_probase_gate_boundary_counts_topk_rows(spark, monkeypatch):
+def test_probase_gate_boundary_counts_topk_rows(spark, monkeypatch, caplog):
     """The auto gate counts top-K rows: a top-K table of exactly the cutoff
     is broadcast, one row more goes relational, and both build the same
     concept KG."""
@@ -524,13 +525,25 @@ def test_probase_gate_boundary_counts_topk_rows(spark, monkeypatch):
         n_pages=100, n_items=30, max_extra=1,
         with_concepts=True, with_canonicalize=False,
     )
+    caplog.set_level(logging.WARNING, "folkscope_spark.conceptualize")
+
+    def warnings():
+        return [r for r in caplog.records if r.name == "folkscope_spark.conceptualize"]
+
     at = run_pipeline(spark, None, probase=pb, **kw)
     assert at["probase_mode"] == "broadcast"
+    assert not warnings()
     one_more = pb.unionByName(
         spark.createDataFrame([("noiseconcept", "zz_noise", 1)], pb.schema)
     )
     over = run_pipeline(spark, None, probase=one_more, **kw)
     assert over["probase_mode"] == "relational"
+    # passing the cutoff is reported once: the gate, the size, the tier
+    [rec] = warnings()
+    assert rec.levelno == logging.WARNING
+    msg = rec.getMessage()
+    assert f"{n_topk + 1} top-K rows seen" in msg
+    assert f"PROBASE_BROADCAST_CUTOFF={n_topk}" in msg and "relationally" in msg
     a = {tuple(x) for x in at["concept_triples"].collect()}
     b = {tuple(x) for x in over["concept_triples"].collect()}
     assert a == b and a

@@ -46,7 +46,6 @@ def stable_ids(plan: str) -> str:
 def main():
     import __spark_entry__ as em
     from folkscope_spark.session import get_spark
-    from pyspark.sql import functions as F
 
     spark = get_spark(app="audit", master="local[8]", shuffle_partitions=8)
     qs = em.queries()
